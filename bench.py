@@ -574,6 +574,10 @@ def main() -> None:
                         "cv": calib_cv,
                         "version": CALIB_VERSION},
         "sf": sf,
+        # the effective Spark placement, so a reader can check the
+        # core count the legs ran on instead of inferring it
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
     }
 
     # In-run normalization against the previous round (r10 brief #7):

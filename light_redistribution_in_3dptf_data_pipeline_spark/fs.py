@@ -266,6 +266,53 @@ def dir_bytes(spark: SparkSession, path: str) -> int:
     return int(fs.getContentSummary(p).getLength())
 
 
+def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
+    """A byte-size session conf as an int; accepts "128m"-style
+    strings."""
+    from pyspark.errors import PySparkException
+
+    try:
+        v = spark.conf.get(key)
+    except PySparkException:
+        return default
+    try:
+        return int(v)
+    except ValueError:
+        return int(spark._jvm.org.apache.spark.network.util.JavaUtils
+                   .byteStringAsBytes(v))
+
+
+def bytes_partitions(spark: SparkSession, dirs: "list[str]") -> int:
+    """Task count for a scan of the data files directly under
+    ``dirs`` (names starting with ``_``/``.`` skipped):
+    ``ceil((bytes + openCost·files) / maxPartitionBytes)`` from the
+    session's ``spark.sql.files.*`` confs — the count Spark's own
+    split sizing gives without its per-core floor (``maxSplitBytes``
+    is capped at ``total / defaultParallelism``, so a few-MB input
+    shatters into one tiny task per core). One ``listStatus`` per
+    directory, driver-side, no job; every directory must live on the
+    first one's filesystem. 0 when there are no data files (callers
+    keep the scan as it is)."""
+    if not dirs:
+        return 0
+    fs, _ = _fs(spark, dirs[0])
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    nbytes = nfiles = 0
+    for d in dirs:
+        for st in fs.listStatus(jpath(d)):
+            if st.isFile() and not st.getPath().getName().startswith(
+                    ("_", ".")):
+                nbytes += int(st.getLen())
+                nfiles += 1
+    if not nfiles:
+        return 0
+    target = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes",
+                         128 << 20)
+    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes",
+                            4 << 20)
+    return max(1, -(-(nbytes + open_cost * nfiles) // max(1, target)))
+
+
 def file_mtime_ms(spark: SparkSession, path: str) -> int:
     """Modification time of ``path`` in epoch millis (raises if
     absent) — the lease-staleness clock."""

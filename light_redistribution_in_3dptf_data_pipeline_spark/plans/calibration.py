@@ -26,6 +26,26 @@ Every heavy step is distributed (``applyInPandas`` per pose /
 same tiny solves as the reference: a ≤20-row pose average for the
 initial estimate (extrinsic_calibration.py:126-160) and the 6-dof LM
 normal equations.
+
+Sizing rule (the DAG's Spark and Python cost tracks its data, not the
+core count):
+
+- every Arrow task pays ~0.18 CPU-s of fixed Python cost, even in a
+  warm reused worker (PySpark's per-task ``importlib.
+  invalidate_caches()`` makes each zipimporter on the worker path
+  re-read its archive directory on Python 3.11), so the Arrow stages'
+  inputs — the chessboard binary scan, the memoized corner tables and
+  the cached LM working set — are coalesced to
+  ``fs.bytes_partitions`` of their files: about one task at the
+  fixture's ~12k corner rows, many at corpus scale;
+- driver-local tables (the tool corners, the one-row stats artifact)
+  are built JVM-side (``pipeline.literal_rows``): ``createDataFrame``
+  on a Python list runs a PythonRDD, which starts a second
+  ``pyspark.daemon`` with freshly forked workers;
+- ``pixel_corners`` projects the memoized ``world_points`` output
+  instead of recomputing the lattice (the Parquet double round trip
+  is lossless), and each LM evaluation is one Spark job
+  (``geometry._normal_equations``).
 """
 
 from __future__ import annotations
@@ -39,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DoubleType, StringType,
                                StructField, StructType)
 
+from ..fs import bytes_partitions
 from ..udf.calibration import FAKE_K, calibrate_intrinsics, detect_chessboard
 from ..udf.geometry import (matrix_to_rodrigues, planar_pnp_np,
                             refine_extrinsic, rodrigues_to_matrix,
@@ -190,6 +211,19 @@ def worst_poses(errors: DataFrame, k: int = 10) -> DataFrame:
             .limit(k))
 
 
+def _bytes_sized(spark: SparkSession, df: DataFrame,
+                 dirs: "list[str]") -> DataFrame:
+    """``df`` coalesced to :func:`fs.bytes_partitions` of the files
+    under ``dirs`` (its input)."""
+    n = bytes_partitions(spark, dirs)
+    return df.coalesce(n) if n else df
+
+
+def _stage(spark: SparkSession, p: Pipeline, name: str) -> DataFrame:
+    """Memoized stage output, read at byte-sized partitions."""
+    return _bytes_sized(spark, p.run(spark, name), [p.path(name)])
+
+
 def full_calibration_run(spark: SparkSession, workdir: str,
                          K_true: np.ndarray = FAKE_K,
                          dist: np.ndarray = TRUE_DIST,
@@ -202,9 +236,9 @@ def full_calibration_run(spark: SparkSession, workdir: str,
     1. U1→U2 intrinsics from a chessboard corpus (written under
        ``workdir/chess`` if absent — same injectable-detector seam as
        production).
-    2. pixel_corners: world lattice projected through the ground-truth
-       camera (Parquet-memoized stage).
-    3. world_points: process_coords column math (Parquet-memoized).
+    2. world_points: process_coords column math (Parquet-memoized).
+    3. pixel_corners: the memoized world_points projected through the
+       ground-truth camera (Parquet-memoized stage).
     4. J2 join → U6 init → U8 LM refine → A4 stats → T2 worst-10 →
        S6 artifact at ``workdir/camera_extrinsic``.
 
@@ -224,16 +258,18 @@ def full_calibration_run(spark: SparkSession, workdir: str,
                                30 + 7 * i % 160]) * 40)
     files = binary_catalog.scan_files(spark, chess_dir, glob="*.JPG",
                                       with_content=True)
-    K = calibrate_intrinsics(detect_chessboard(files))
+    K = calibrate_intrinsics(detect_chessboard(
+        _bytes_sized(spark, files, [chess_dir])))
 
     # --- stages 2+3: memoized corner tables ---------------------------
     p = Pipeline(root=os.path.join(workdir, "stages"))
     p.add("world_points", lambda s: world_corner_points(s))
+    world = _stage(spark, p, "world_points")
     p.add("pixel_corners",
-          lambda s: synthetic_pixel_corners(s, K_true, dist, rvec_true,
-                                            tvec_true))
-    world = p.run(spark, "world_points")
-    pixels = p.run(spark, "pixel_corners")
+          lambda s: synthetic_pixel_corners(world, K_true, dist,
+                                            rvec_true, tvec_true),
+          deps=("world_points",))
+    pixels = _stage(spark, p, "pixel_corners")
 
     # --- stage 4: extrinsic solve -------------------------------------
     from ..queries.generators import pose_grid_df
@@ -241,10 +277,12 @@ def full_calibration_run(spark: SparkSession, workdir: str,
     poses = pose_grid_df(spark)
     x0 = initial_extrinsic_estimate(pixels, poses, K)
 
-    joined = (world
-              .select(F.col("pose_id").cast("string").alias("img_id"),
-                      "corner_idx", "x", "y", "z")
-              .join(pixels, ["img_id", "corner_idx"], "inner"))
+    joined = _bytes_sized(
+        spark,
+        world.select(F.col("pose_id").cast("string").alias("img_id"),
+                     "corner_idx", "x", "y", "z")
+        .join(pixels, ["img_id", "corner_idx"], "inner"),
+        [p.path("world_points"), p.path("pixel_corners")])
     params, history = refine_extrinsic(joined, K, dist, x0,
                                        max_iters=max_iters)
 

@@ -123,6 +123,35 @@ _CENTROIDS_CACHE: "dict[str, tuple[tuple, str, list]]" = {}
 _CENTROIDS_CACHE_MAX = 16
 
 
+# Per-process memo of the centroid broadcast that _attach_cells ships
+# to its tasks, keyed by (root, digest of the centroid rows) and
+# bounded like _CENTROIDS_CACHE. The rows come from _load_centroids,
+# which revalidates them on every call; the digest key is taken from
+# the rows themselves, so a hit always broadcasts the exact rows
+# passed in. Repeated ingests into one root thus ship one broadcast,
+# and the process holds at most _CENTROIDS_CACHE_MAX of them: an
+# evicted handle is destroyed.
+_CENTROID_BCAST: "dict[tuple, tuple]" = {}
+
+
+def _centroid_broadcast(sc, root: "str | None", cent_rows, build):
+    """The memoized broadcast of ``build()`` for these centroid rows
+    (see _CENTROID_BCAST); a broadcast of a stopped context never
+    hits."""
+    key = (root, _centroid_digest(cent_rows))
+    hit = _CENTROID_BCAST.pop(key, None)
+    if hit is not None and hit[0] is sc:
+        _CENTROID_BCAST[key] = hit   # LRU
+        return hit[1]
+    if len(_CENTROID_BCAST) >= _CENTROIDS_CACHE_MAX:
+        old_sc, old_bc = _CENTROID_BCAST.pop(next(iter(_CENTROID_BCAST)))
+        if old_sc is sc:
+            old_bc.destroy()
+    bc = sc.broadcast(build())
+    _CENTROID_BCAST[key] = (sc, bc)
+    return bc
+
+
 def _centroid_table_sig(spark: SparkSession, root: str) -> "tuple | None":
     """(name, mtime, length) listing signature of the centroid
     table, or None when the listing failed (absent table or a
@@ -319,7 +348,8 @@ def _cell_scores(delta: DataFrame, cents: DataFrame,
                      / (F.col("nv") * F.lit(1e18))).alias("score")))
 
 
-def _attach_cells(delta: DataFrame, cent_rows, dim: int) -> DataFrame:
+def _attach_cells(delta: DataFrame, cent_rows, dim: int,
+                  root: "str | None" = None) -> DataFrame:
     """``delta`` columns + assigned ``cell``, computed IN-ROW: one
     Arrow-batched ``mapInPandas`` pass whose task holds the frozen
     centroid matrix and argmaxes the mean-scaled centroid dots in
@@ -355,21 +385,27 @@ def _attach_cells(delta: DataFrame, cent_rows, dim: int) -> DataFrame:
     re-shipped them with EVERY task — immaterial at toy K, a
     K·dim-sized per-task tax once the quantizer has thousands of
     cells. The broadcast ships once per executor and is torrent-
-    distributed; task closures carry only the handle."""
+    distributed; task closures carry only the handle. The handle is
+    memoized per ``root`` and centroid digest (_CENTROID_BCAST), so
+    repeated ingests into one root reuse one broadcast."""
     import numpy as np
 
-    cells_sorted = sorted(
-        (int(r.cell), [int(s) for s in r.csum], int(r.nv))
-        for r in cent_rows)
-    cells = np.array([c for c, _, _ in cells_sorted], dtype=np.int64)
-    csum = np.array([s for _, s, _ in cells_sorted], dtype=np.int64)
-    denom = np.array([v for _, _, v in cells_sorted],
-                     dtype=np.float64) * 1e18
     s = CSUM_SPLIT
-    lo_t = np.mod(csum, s).T.copy()                      # (dim, k)
-    hi_t = ((csum - np.mod(csum, s)) // s).T.copy()
-    bc = delta.sparkSession.sparkContext.broadcast(
-        (cells, lo_t, hi_t, denom))
+
+    def matrices():
+        cells_sorted = sorted(
+            (int(r.cell), [int(v) for v in r.csum], int(r.nv))
+            for r in cent_rows)
+        cells = np.array([c for c, _, _ in cells_sorted], dtype=np.int64)
+        csum = np.array([v for _, v, _ in cells_sorted], dtype=np.int64)
+        denom = np.array([v for _, _, v in cells_sorted],
+                         dtype=np.float64) * 1e18
+        lo_t = np.mod(csum, s).T.copy()                  # (dim, k)
+        hi_t = ((csum - np.mod(csum, s)) // s).T.copy()
+        return cells, lo_t, hi_t, denom
+
+    bc = _centroid_broadcast(delta.sparkSession.sparkContext, root,
+                             cent_rows, matrices)
     from pyspark.sql.types import LongType, StructField, StructType
 
     # a NEW StructType: StructType.add would mutate the DataFrame's
@@ -414,7 +450,7 @@ def assign_cells(spark: SparkSession, root: str,
     return _attach_cells(
         delta.select("vec_id", "embedding"),
         _load_centroids(spark, root, meta),
-        meta["dim"]).select("vec_id", "cell")
+        meta["dim"], root).select("vec_id", "cell")
 
 
 def committed_ivf_batches(spark: SparkSession, root: str) -> list[str]:
@@ -569,7 +605,7 @@ def _ivf_ingest_delta(spark: SparkSession, root: str, emb: DataFrame,
         # in-row numpy argmax (zero exchanges) — the crossJoin →
         # groupBy → join-back shape this replaces paid two Exchange
         # pairs per ingest; parity notes on _attach_cells
-        tagged = _attach_cells(delta, cent_rows, meta["dim"])
+        tagged = _attach_cells(delta, cent_rows, meta["dim"], root)
     tagged = tagged.withColumn("batch_id", F.lit(batch_id))
 
     if storage == "int8":

@@ -15,8 +15,10 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (ArrayType, DoubleType, IntegerType, LongType,
+                               StructField, StructType)
 
 from ..queries.generators import euler_zyx_matrix_cols, pose_grid_df
 
@@ -25,6 +27,23 @@ from ..queries.generators import euler_zyx_matrix_cols, pose_grid_df
 TOOL_CORNERS = ((90.0, 90.0, 0.0), (-90.0, 90.0, 0.0),
                 (-90.0, -90.0, 0.0), (90.0, -90.0, 0.0))
 MISSING_POSE_IDS = (51, 126, 722, 1414, 2203)
+_CORNER_SCHEMA = StructType([StructField("corner_idx", IntegerType()),
+                             StructField("px", DoubleType()),
+                             StructField("py", DoubleType()),
+                             StructField("pz", DoubleType())])
+
+
+def literal_rows(rows: "list[tuple]", schema: StructType) -> Column:
+    """A driver-local table as ONE literal ``ARRAY<STRUCT>`` column
+    typed by ``schema`` (every field nullable, as
+    ``spark.createDataFrame`` infers it); ``F.inline`` of it yields
+    the rows. The table is built in the JVM: ``createDataFrame`` on a
+    Python list runs its rows through a PythonRDD, which starts a
+    second ``pyspark.daemon`` (its own worker-factory key, freshly
+    forked workers re-importing pandas/pyarrow) and pays a Python
+    task per partition for a few literals."""
+    return (F.array(*[F.struct(*[F.lit(v) for v in r]) for r in rows])
+            .cast(ArrayType(schema)))
 
 
 @dataclass
@@ -62,12 +81,19 @@ class Pipeline:
 
     def run(self, spark: SparkSession, name: str,
             force: bool = False) -> DataFrame:
+        self._materialize(spark, name, force)
+        return spark.read.parquet(self.path(name))
+
+    def _materialize(self, spark: SparkSession, name: str,
+                     force: bool) -> None:
+        """Write ``name`` (deps first) unless memoized. Deps are only
+        materialized, not read: each ``spark.read.parquet`` infers its
+        schema from a footer in a Spark job of its own."""
         st = self.stages[name]
         for dep in st.deps:
-            self.run(spark, dep, force=force)
+            self._materialize(spark, dep, force)
         if force or not self.done(name, spark):
             st.build(spark).write.mode("overwrite").parquet(self.path(name))
-        return spark.read.parquet(self.path(name))
 
 
 def world_corner_points(spark: SparkSession,
@@ -88,11 +114,10 @@ def world_corner_points(spark: SparkSession,
         ~F.col("pose_id").isin(list(missing)))
     R = euler_zyx_matrix_cols(F.col("ea"), F.col("eb"), F.col("ec"))
 
-    corners = spark.createDataFrame(
-        [(i, *c) for i, c in enumerate(TOOL_CORNERS)],
-        "corner_idx INT, px DOUBLE, py DOUBLE, pz DOUBLE")
-
-    df = grid.crossJoin(F.broadcast(corners))
+    # the 4 tool corners fan out in-row (no join, no broadcast job):
+    # same rows, same per-pose corner order as a crossJoin
+    df = grid.select("*", F.inline(literal_rows(
+        [(i, *c) for i, c in enumerate(TOOL_CORNERS)], _CORNER_SCHEMA)))
     px, py, pz = F.col("px"), F.col("py"), F.col("pz")
     return df.select(
         "pose_id", "corner_idx",
@@ -123,15 +148,25 @@ def write_stats_artifact(spark: SparkSession, path: str,
     extrinsic_calibration.py:381-387) as a single-row Parquet write —
     each matrix a flattened ARRAY<DOUBLE> plus a shape column, each
     stat a DOUBLE column. One row, one file: the calibration artifact
-    every downstream stage broadcasts."""
-    row = {}
+    every downstream stage broadcasts.
+
+    The row is built JVM-side (:func:`literal_rows`) with the schema
+    ``spark.createDataFrame([row])`` would infer: columns in sorted
+    name order, ``ARRAY<DOUBLE>`` / ``ARRAY<BIGINT>`` / ``DOUBLE``,
+    all nullable."""
+    cols = {}
     for name, m in matrices.items():
         arr = np.asarray(m, dtype=np.float64)
-        row[name] = [float(x) for x in arr.ravel()]
-        row[f"{name}_shape"] = [int(s) for s in arr.shape]
-    row.update({k: float(v) for k, v in stats.items()})
-    (spark.createDataFrame([row])
-     .coalesce(1).write.mode("overwrite").parquet(path))
+        cols[name] = ([float(x) for x in arr.ravel()],
+                      ArrayType(DoubleType()))
+        cols[f"{name}_shape"] = ([int(s) for s in arr.shape],
+                                 ArrayType(LongType()))
+    cols.update({k: (float(v), DoubleType()) for k, v in stats.items()})
+    names = sorted(cols)
+    schema = StructType([StructField(n, cols[n][1]) for n in names])
+    row = tuple(cols[n][0] for n in names)
+    (spark.range(0, 1, 1, 1).select(F.inline(literal_rows([row], schema)))
+     .write.mode("overwrite").parquet(path))
 
 
 def read_stats_artifact(spark: SparkSession, path: str
@@ -148,17 +183,18 @@ def read_stats_artifact(spark: SparkSession, path: str
     return matrices, stats
 
 
-def synthetic_pixel_corners(spark: SparkSession, K: np.ndarray,
+def synthetic_pixel_corners(world: DataFrame, K: np.ndarray,
                             dist: np.ndarray, rvec: np.ndarray,
                             tvec: np.ndarray,
                             drop_rate_mod: int = 200) -> DataFrame:
-    """Project world corners through a known camera to fabricate the
-    ``pixel_corners`` table (FIXTURES.md §1) — the synthetic scene used
-    by property tests for U6/U7/U8; every ``drop_rate_mod``-th pose is
-    dropped to make pixel∩world a real intersection (X1/J2)."""
+    """Project the ``world`` corner table (:func:`world_corner_points`
+    rows, typically its memoized stage output) through a known camera
+    to fabricate the ``pixel_corners`` table (FIXTURES.md §1) — the
+    synthetic scene used by property tests for U6/U7/U8; every
+    ``drop_rate_mod``-th pose is dropped to make pixel∩world a real
+    intersection (X1/J2)."""
     from ..udf.geometry import with_projection
 
-    world = world_corner_points(spark)
     params = np.concatenate([rvec, tvec])
     proj = with_projection(world, params, K, dist)
     return (proj

@@ -27,9 +27,10 @@ def pose_grid_df(spark: SparkSession) -> DataFrame:
     is serpentine order for even orientations and the reverse walk for
     odd orientations (point3d_transformation.py:96-101).
     """
-    orient = spark.range(125).select(F.col("id").alias("oi"))
-    step = spark.range(25).select(F.col("id").alias("si"))
-    df = orient.crossJoin(step)
+    # one range, split by div/mod: the same (oi, si) rows as
+    # range(125) × range(25), without a join and its broadcast job
+    df = spark.range(125 * 25).select(
+        F.expr("id div 25").alias("oi"), (F.col("id") % 25).alias("si"))
     # grid index actually visited at this step
     k = F.when(F.col("oi") % 2 == 1, 24 - F.col("si")).otherwise(F.col("si"))
     gi = (k / 5).cast("bigint")     # serpentine row (outer grid axis)

@@ -208,11 +208,21 @@ def pnp_per_group(joined: DataFrame, K: np.ndarray) -> DataFrame:
 # U8 — distributed Gauss-Newton refinement (extrinsic_calibration.py:132-171)
 # ---------------------------------------------------------------------------
 
-def _residual_stats_partition(K: np.ndarray, dist: np.ndarray,
-                              params: np.ndarray, eps: float):
-    """Build a mapInPandas closure that emits per-batch partial sums:
-    J^T J (upper triangle, 21), J^T r (6), sum r², count."""
+_IU = np.triu_indices(6)
+_STATS_SCHEMA = StructType(
+    [StructField(f"jtj_{a}_{b}", DoubleType()) for a, b in zip(*_IU)]
+    + [StructField(f"jtr_{j}", DoubleType()) for j in range(6)]
+    + [StructField("rss", DoubleType()), StructField("n", DoubleType())]
+)
+
+
+def _normal_eq_partials(K: np.ndarray, dist: np.ndarray,
+                        params: np.ndarray, eps: float):
+    """Build a mapInPandas closure that folds ALL of its task's Arrow
+    batches into ONE row of partial sums: J^T J (upper triangle, 21),
+    J^T r (6), sum r², count — forward-difference Jacobian."""
     def fn(batches):
+        acc = np.zeros(len(_STATS_SCHEMA.fields))
         for pdf in batches:
             pts = pdf[["x", "y", "z"]].to_numpy(dtype=float)
             obs = pdf[["u", "v"]].to_numpy(dtype=float)
@@ -224,24 +234,27 @@ def _residual_stats_partition(K: np.ndarray, dist: np.ndarray,
                 p[j] += eps
                 pert = project_points_np(pts, p[:3], p[3:], K, dist)
                 J[:, j] = (pert - base).ravel() / eps
-            JTJ = J.T @ J
-            JTr = J.T @ r
-            iu = np.triu_indices(6)
-            yield pd.DataFrame([{
-                **{f"jtj_{a}_{b}": JTJ[a, b] for a, b in zip(*iu)},
-                **{f"jtr_{j}": JTr[j] for j in range(6)},
-                "rss": float(r @ r),
-                "n": float(len(r)),
-            }])
+            acc += np.concatenate([(J.T @ J)[_IU], J.T @ r,
+                                   [r @ r, len(r)]])
+        yield pd.DataFrame([acc], columns=_STATS_SCHEMA.fieldNames())
     return fn
 
 
-_STATS_SCHEMA = StructType(
-    [StructField(f"jtj_{a}_{b}", DoubleType())
-     for a, b in zip(*np.triu_indices(6))]
-    + [StructField(f"jtr_{j}", DoubleType()) for j in range(6)]
-    + [StructField("rss", DoubleType()), StructField("n", DoubleType())]
-)
+def _normal_equations(working: DataFrame, K: np.ndarray, dist: np.ndarray,
+                      params: np.ndarray, eps: float):
+    """One LM evaluation at ``params`` as ONE Spark job: a map-only
+    stage emits one partial-sum row per task, the driver ``collect``s
+    those O(partitions) rows and adds them in numpy (a
+    ``groupBy().sum()`` would be a shuffle-map job plus a result job
+    under AQE). Returns (J^T J, J^T r, sum r², residual count)."""
+    rows = working.mapInPandas(_normal_eq_partials(K, dist, params, eps),
+                               _STATS_SCHEMA).collect()
+    tot = (np.array(rows, dtype=float)
+           .reshape(-1, len(_STATS_SCHEMA.fields)).sum(axis=0))
+    JTJ = np.zeros((6, 6))
+    JTJ[_IU] = tot[:21]
+    JTJ.T[_IU] = tot[:21]
+    return JTJ, tot[21:27], tot[27], tot[28]
 
 
 def refine_extrinsic(joined: DataFrame, K: np.ndarray, dist: np.ndarray,
@@ -251,11 +264,22 @@ def refine_extrinsic(joined: DataFrame, K: np.ndarray, dist: np.ndarray,
     """Levenberg-Marquardt over the cached working set.
 
     The classic Spark pattern for BA-style optimizers (SURVEY §2.9
-    U8): parameters are driver state broadcast into each evaluation;
-    each iteration is ONE distributed job that reduces the 6×6 normal
-    equations + residual sum; the 6-dof solve happens on the driver.
+    U8): parameters are driver state shipped into each evaluation;
+    each evaluation (:func:`_normal_equations`) is one map-only Spark
+    job whose tasks each return one row of 6×6 normal-equation and
+    residual partial sums; the 6-dof solve happens on the driver.
     Iterations are capped like the reference (max_nfev=100,
     extrinsic_calibration.py:160).
+
+    Every task of an evaluation is a Python (Arrow) task, and each
+    pays ~0.18 CPU-s of fixed worker cost before touching data
+    (PySpark's ``setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` per task, and on Python 3.11
+    every zipimporter on the worker path — ``pyspark.zip``, py4j, the
+    Spark jar — re-reads its archive directory, ~27k entries). So the
+    working set's partition count, which callers should size by
+    bytes (``fs.bytes_partitions``), not cores, sets the evaluation's
+    Python cost; it is cached as given.
 
     Returns (params, history) where history is the per-iteration RMSE.
     """
@@ -264,24 +288,12 @@ def refine_extrinsic(joined: DataFrame, K: np.ndarray, dist: np.ndarray,
     lam = lm_lambda
     history: list[float] = []
 
-    def evaluate(p: np.ndarray):
-        stats = joined.mapInPandas(
-            _residual_stats_partition(K, dist, p, eps), _STATS_SCHEMA)
-        agg = stats.groupBy().sum().collect()[0]
-        vals = dict(zip([f.name for f in _STATS_SCHEMA.fields],
-                        [agg[i] for i in range(len(_STATS_SCHEMA.fields))]))
-        JTJ = np.zeros((6, 6))
-        for a, b in zip(*np.triu_indices(6)):
-            JTJ[a, b] = JTJ[b, a] = vals[f"jtj_{a}_{b}"]
-        JTr = np.array([vals[f"jtr_{j}"] for j in range(6)])
-        return JTJ, JTr, vals["rss"], vals["n"]
-
-    JTJ, JTr, rss, n = evaluate(params)
+    JTJ, JTr, rss, n = _normal_equations(joined, K, dist, params, eps)
     history.append(float(np.sqrt(rss / (n / 2))))
     for _ in range(max_iters):
         step = np.linalg.solve(JTJ + lam * np.diag(np.diag(JTJ)), -JTr)
         cand = params + step
-        JTJ2, JTr2, rss2, _ = evaluate(cand)
+        JTJ2, JTr2, rss2, _ = _normal_equations(joined, K, dist, cand, eps)
         if rss2 < rss:  # accept, relax damping
             params, JTJ, JTr, rss = cand, JTJ2, JTr2, rss2
             lam = max(lam / 10, 1e-12)

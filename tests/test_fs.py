@@ -115,3 +115,43 @@ def test_lost_race_classifier(spark, tmp_path):
     import pytest
     with pytest.raises(Exception):
         fs.create_exclusive(spark, str(parent / "child"), "t")
+
+
+def test_probe_scan_partitions_by_bytes(spark, tmp_path):
+    """The key-scoped probe scan (``corpus._visible_scan_keys``) is
+    coalesced to ceil((bytes + openCost·files) / maxPartitionBytes)
+    over its selected leaf files (``fs.bytes_partitions``), counted
+    here independently from the local directory tree."""
+    from pyspark.sql import functions as F
+
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
+        _visible_scan_keys)
+
+    path = str(tmp_path / "postings")
+    (spark.range(0, 4000, 1, 4)
+     .select("id", (F.col("id") % 3).alias("cell"),
+             F.when(F.col("id") < 2000, "b0").otherwise("b1")
+             .alias("batch_id"))
+     .write.partitionBy("batch_id", "cell").parquet(path))
+    schema = "id BIGINT, cell BIGINT, batch_id STRING"
+    leaves = [os.path.join(path, f"batch_id={b}", f"cell={c}")
+              for b in ("b0", "b1") for c in (0, 2)]
+    files = [os.path.join(d, f) for d in leaves for f in os.listdir(d)
+             if not f.startswith(("_", "."))]
+    nbytes = sum(os.path.getsize(f) for f in files)
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "3000")
+    spark.conf.set("spark.sql.files.openCostInBytes", "100")
+    try:
+        df = _visible_scan_keys(spark, path, ["b0", "b1"], schema,
+                                "cell", [0, 2])
+        want = -(-(nbytes + 100 * len(files)) // 3000)
+        assert 1 < want < len(files)
+        assert df.rdd.getNumPartitions() == want
+        assert fs.bytes_partitions(spark, leaves) == want
+        assert df.count() == sum(1 for i in range(4000) if i % 3 != 1)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+        spark.conf.unset("spark.sql.files.openCostInBytes")
+    os.makedirs(tmp_path / "empty")
+    assert fs.bytes_partitions(spark, [str(tmp_path / "empty")]) == 0

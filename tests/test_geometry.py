@@ -248,3 +248,38 @@ class TestRefineExtrinsic:
         assert history[-1] < 1e-3, f"did not converge: {history}"
         assert np.allclose(params[:3], RVEC_TRUE, atol=1e-4)
         assert np.allclose(params[3:], TVEC_TRUE, atol=1e-1)
+
+    def test_one_job_per_evaluation_and_partition_invariant(
+            self, spark, monkeypatch):
+        """U8: every LM evaluation is one Spark job (map-only partial
+        sums collected to the driver), and the refined params do not
+        depend on how the working set is partitioned."""
+        world = plans.world_corner_points(spark).filter(
+            F.col("pose_id") < 20)
+        joined = geo.with_projection(
+            world, np.concatenate([RVEC_TRUE, TVEC_TRUE]), K, DIST
+        ).select("x", "y", "z", F.col("u_hat").alias("u"),
+                 F.col("v_hat").alias("v")).localCheckpoint()
+        x0 = np.concatenate([RVEC_TRUE + 0.05, TVEC_TRUE + [20, -30, 50]])
+        calls = []
+        real = geo._normal_equations
+
+        def counted(*a):
+            calls.append(1)
+            return real(*a)
+
+        monkeypatch.setattr(geo, "_normal_equations", counted)
+        sc = spark.sparkContext
+        group = "test_geometry.lm_jobs"
+        sc.setJobGroup(group, "refine_extrinsic")
+        try:
+            p1, _ = geo.refine_extrinsic(joined.coalesce(1), K, DIST, x0,
+                                         max_iters=6)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(calls) >= 3
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) \
+            == len(calls)
+        p4, _ = geo.refine_extrinsic(joined.repartition(4), K, DIST, x0,
+                                     max_iters=6)
+        assert np.abs(p4 - p1).max() <= 1e-9

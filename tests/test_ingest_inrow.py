@@ -124,3 +124,33 @@ def test_centroid_memo_hit_and_rewrite_revalidation(spark, tmp_path):
     assert r2 is not r1
     assert sorted((int(r.cell), int(r.nv)) for r in r2) == \
         sorted((int(r.cell), int(r.nv)) for r in r1)
+
+
+def test_centroid_broadcast_reused_across_ingests(spark, tmp_path):
+    """Repeated ingests into one IVF root ship ONE centroid broadcast
+    (memoized by root + centroid digest) instead of creating, and
+    never destroying, one per call; an evicted handle is destroyed."""
+    root = str(tmp_path / "ivf")
+    I.init_ivf_index(spark, root,
+                     load_table(spark, SF_DIR, "embeddings"))
+    delta = _delta(spark, n=40)
+    handles = []
+    for i in range(2):
+        I.ivf_ingest_delta(spark, root,
+                           delta.filter(F.col("vec_id") % 2 == i),
+                           f"b{i}")
+        handles.append([bc for (r, _), (_, bc)
+                        in I._CENTROID_BCAST.items() if r == root])
+    assert len(handles[0]) == 1 and handles[0] == handles[1]
+    bc = handles[0][0]
+    assert I.assign_cells(spark, root, delta).count() == delta.count()
+    assert [b for (r, _), (_, b) in I._CENTROID_BCAST.items()
+            if r == root] == [bc]
+    # bounded: filling the memo with other keys evicts and destroys
+    # the oldest handle
+    cent_rows = I._load_centroids(spark, root, I._load_meta(spark, root))
+    for k in range(I._CENTROIDS_CACHE_MAX):
+        I._centroid_broadcast(spark.sparkContext, f"other{k}", cent_rows,
+                              lambda: k)
+    assert len(I._CENTROID_BCAST) == I._CENTROIDS_CACHE_MAX
+    assert all(r != root for r, _ in I._CENTROID_BCAST)

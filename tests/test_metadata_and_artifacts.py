@@ -102,6 +102,48 @@ def test_stats_artifact_roundtrip(spark, tmp_path):
     assert got_stats == stats
 
 
+def test_stats_artifact_schema_is_inferred_row_schema(spark, tmp_path):
+    """The JVM-built artifact row has the Parquet schema that
+    ``spark.createDataFrame([row])`` infers for the same dict — names
+    in sorted order, ARRAY<DOUBLE>/ARRAY<BIGINT>/DOUBLE, every field
+    and array element nullable — and reads back exactly."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+
+    mats = {"extrinsic_matrix": np.arange(16.0).reshape(4, 4) / 3,
+            "camera_matrix": np.array([[1000.0, 0, 400], [0, 1000.0, 400],
+                                       [0, 0, 1]])}
+    stats = {"rmse": 0.1 + 0.2, "mean_error": float("nan"),
+             "n_points": 12432.0}
+    path = str(tmp_path / "artifact")
+    pipeline.write_stats_artifact(spark, path, mats, stats)
+    row = dict(stats)
+    for name, m in mats.items():
+        row[name] = [float(x) for x in m.ravel()]
+        row[f"{name}_shape"] = [int(s) for s in m.shape]
+    ref = str(tmp_path / "inferred")
+    spark.createDataFrame([row]).coalesce(1).write.parquet(ref)
+
+    def footer(p):
+        (f,) = glob.glob(f"{p}/*.parquet")
+        return pq.read_schema(f)
+
+    got, want = footer(path), footer(ref)
+    assert got.equals(want, check_metadata=False), (got, want)
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    assert json.loads(got.metadata[key]) == json.loads(want.metadata[key])
+    got_mats, got_stats = pipeline.read_stats_artifact(spark, path)
+    assert got_mats.keys() == mats.keys()
+    for name, m in mats.items():
+        assert np.array_equal(got_mats[name], m)
+    assert got_stats.keys() == stats.keys()
+    assert got_stats["rmse"] == stats["rmse"]
+    assert np.isnan(got_stats["mean_error"])
+    assert got_stats["n_points"] == stats["n_points"]
+
+
 def test_asof_join_deterministic_ties(spark):
     """Duplicate right rows at the same (key, ts) must resolve to the
     same payload on every run (the max payload tuple)."""

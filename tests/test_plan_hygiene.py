@@ -10,7 +10,7 @@ must keep to survive a 100 TB scale-up, asserted mechanically.
   none at all.
 - ``BroadcastNestedLoopJoin`` only where a *deliberate* one-row or
   constant-size side is broadcast (query vector, corpus-size scalar,
-  single-row stats join, the 125x25 generated lattice) — growing that
+  single-row stats join) — growing that
   whitelist requires justifying the new crossJoin's scale story here.
 """
 
@@ -27,7 +27,6 @@ from conftest import SF_DIR
 # construction, so the "nested loop" is a scalar attach, not a scan
 # of a second big input.
 BNLJ_OK = {
-    "f13_f14_pose_grid_rotation",    # 125 x 25 generated lattice
     "tx9_tfidf_vocab",               # one-row corpus-size scalar
     "sim1_sim2_cosine_topk",         # one-row query vector
     "sim3_sim4_ivf_train_assign",    # one-row query vector / L centroids
