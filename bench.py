@@ -448,8 +448,7 @@ def main() -> None:
         # must read ≤ the plain leg on this idle session). The r13/r14
         # *_seed headline legs are RETIRED (r14 VERDICT #8): the
         # opt-in two-phase mode's cost model is recorded in
-        # EE_COSTMODEL_r14.json and stays measurable on demand via
-        # tools/profile_ee_sf1.py — re-measuring a known number cost
+        # EE_COSTMODEL_r14.json — re-measuring a known number cost
         # 1.7 s of headline wall every round.
         for fam, probe in (
                 ("ivf8_np4_topk",

@@ -11,7 +11,7 @@ stored vectors' DIRECTIONS: for every cell (IVF) or bucket (LSH),
 is the unit direction of the STORED scoring payload — the int8 code
 (int8 roots) or the fixed-point nano components (float roots). The
 probes score exactly ``cos(q, v) = q·u / ‖q‖`` (plans/codes.
-code_cosine, ann_index._cosine_rerank), so for every member of a
+code_cosine, postings.scores), so for every member of a
 cell::
 
     cos(q, v)  =  Σ_i q_i·u_i / ‖q‖
@@ -139,7 +139,7 @@ def payload_column(storage: str) -> "tuple[str, Column]":
     - ``int8``  → kind "code": the stored code array;
     - ``float`` → kind "nano": the fixed-point decode of the stored
       embedding (operators.similarity._fixed_point — what
-      ``_cosine_rerank``/``_ivf_rerank`` score)."""
+      ``postings.scores`` score)."""
     if storage == "int8":
         return "code", F.col("code")
     from ..operators.similarity import _fixed_point
@@ -163,7 +163,7 @@ def _delta_bounds(delta: DataFrame, key_col: str, payload: Column,
     widen hook taxed EVERY ingest ~0.7–3.5 s (the r13 ``weak`` mark:
     builder sf1 ivf_ingest 2.43 → 5.89 s). The numpy fold does the
     identical IEEE-double arithmetic ~7× faster end-to-end (measured
-    tools/profile_bounds5.py: 0.4–0.55 s vs 1.0–3.1 s), and any
+    EE_COSTMODEL_r14.json: 0.4–0.55 s vs 1.0–3.1 s), and any
     summation-order difference (numpy pairwise vs JVM sequential
     fold, ≤ ~1e-15 relative) is absorbed by EPS_COMPONENT's 1e-9
     widening — six orders of magnitude of slack, so the stored box

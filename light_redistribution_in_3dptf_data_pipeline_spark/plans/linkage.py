@@ -66,11 +66,12 @@ def _committed_vec_ids(spark: SparkSession,
     if _index_kind(spark, index_root) == "ann_lsh_incremental":
         from pyspark.sql import functions as F
 
-        from .ann_index import _load_meta, _num_tables, read_ann_index
+        from .ann_index import _load_meta, read_ann_index
+        from .postings import num_tables
 
         scan = read_ann_index(spark, index_root)
         meta = _load_meta(spark, index_root)
-        if _num_tables(meta) > 1:
+        if num_tables(meta) > 1:
             # one row per VECTOR: the table-0 partition (multi-table
             # roots store one copy per hyperplane table)
             scan = scan.filter(

@@ -494,7 +494,7 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
         n_planes = num_planes if num_planes is not None \
             else ometa["num_planes"]
         n_dim = dim if dim is not None else ometa["dim"]
-        from .ann_index import _num_tables
+        from .postings import num_tables as _num_tables
         n_tables = (num_tables if num_tables is not None
                     else _num_tables(ometa))
         old_scan = read_ann_index(spark, old_root)

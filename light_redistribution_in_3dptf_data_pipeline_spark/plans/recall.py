@@ -36,15 +36,19 @@ def exact_topk_ids(scan: DataFrame, query_vec: list, k: int,
     """Ground truth: exact fixed-point cosine top-k ids over an
     unpruned (vec_id, embedding) scan — BY CONSTRUCTION the same
     scoring arithmetic and tie order as the index probes, because it
-    IS the probes' re-rank (``ann_index._cosine_rerank``) run over
-    the full scan (dummy bucket column, no probe filter). Recall
-    therefore measures PRUNING loss only; scoring drift is
-    impossible, not merely tested for."""
-    from .ann_index import _cosine_rerank
+    IS the probes' scorer (``postings.scores``) run over the full
+    scan (dummy bucket column, no probe filter). Recall therefore
+    measures PRUNING loss only; scoring drift is impossible, not
+    merely tested for."""
+    from .ann_index import ANN
+    from .postings import qdec, scores
 
     full = scan.withColumn("bucket", F.lit(0))
+    qci, qsq = qdec(query_vec)
     return [int(r.vec_id) for r in
-            _cosine_rerank(full, query_vec, k, exclude_id).collect()]
+            scores(ANN, full, qci, qsq, exclude_id, "float")
+            .orderBy(F.desc("cosine"), F.asc("vec_id"))
+            .limit(k).collect()]
 
 
 def measure_recall(spark: SparkSession, root: str,
@@ -69,17 +73,18 @@ def measure_recall(spark: SparkSession, root: str,
     settings against each other from committed samples alone."""
     import math
 
-    from .ann_index import (_load_meta as _ann_meta, _num_tables,
+    from .ann_index import (_load_meta as _ann_meta,
                             ann_incremental_topk, ann_vectors)
     from .ivf_index import (_load_meta as _ivf_meta,
                             ivf_incremental_topk, ivf_vectors)
     from .linkage import _index_kind
+    from .postings import num_tables
 
     kind = _index_kind(spark, root)
     extra: dict = {}
     if kind == "ann_lsh_incremental":
         meta = _ann_meta(spark, root)
-        nt = _num_tables(meta)
+        nt = num_tables(meta)
         j = int(meta["num_planes"])
         full = ann_vectors(spark, root)
         if probe_buckets is not None:

@@ -72,10 +72,11 @@ def run_vector_ingestion(spark: SparkSession, src_path: str,
 
     from ..fs import path_exists, read_text
     from ..operators.similarity import EMB_DIM, NUM_PLANES
-    from ..plans.ann_index import (_meta_path, ann_ingest_delta)
+    from ..plans.ann_index import ann_ingest_delta
     from ..plans.corpus import BatchAlreadyIngested
     from ..plans.ivf_index import ivf_ingest_delta
     from ..plans.migration import resolve_index_root
+    from ..plans.postings import meta_path
     from .ingestion import reconcile_replay
 
     # a migration cutover pointer resolves transparently; a fresh
@@ -130,8 +131,8 @@ def run_vector_ingestion(spark: SparkSession, src_path: str,
         return nonce_cache["v"]
 
     def stored_meta() -> dict:
-        if path_exists(spark, _meta_path(index_root)):
-            return json.loads(read_text(spark, _meta_path(index_root)))
+        if path_exists(spark, meta_path(index_root)):
+            return json.loads(read_text(spark, meta_path(index_root)))
         return {}
 
     def drain(batch: DataFrame, epoch_id: int) -> None:

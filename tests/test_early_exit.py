@@ -23,6 +23,8 @@ from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
 from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
     ivf_index as I)
 from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
+    postings as P)
+from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
     recall as R)
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -142,7 +144,7 @@ def test_pruning_fires_on_clustered_data(spark, cl, roots):
     scan = I.read_ivf_postings(spark, root)
     scored, pruned = CS.early_exit_scored(
         stats, scan, "cell", probe_cells, qci, qsq, 10,
-        lambda s: I._ivf_scores(s, qci, qsq, 0, "int8"))
+        lambda s: P.scores(I.IVF, s, qci, qsq, 0, "int8"))
     assert len(pruned) == 3, (probe_cells, pruned)
     # and the surviving frame still yields the exact top-k
     want = _rows(I.ivf_incremental_topk(spark, root, qv, k=10,
@@ -661,7 +663,7 @@ def test_seed2_prunes_more_on_asymmetric_neighborhood(spark,
     seed keeps them all, seed2 proves them away. On SYMMETRIC
     mixtures the measured gain is zero (either the seed threshold
     already prunes everything or the boxes are too loose for any
-    threshold) — tools/profile_seed2.py records that honestly."""
+    threshold) — EE_COSTMODEL_r14.json records that honestly."""
     dim = 64
 
     def vec(pairs):
@@ -704,18 +706,18 @@ def test_seed2_prunes_more_on_asymmetric_neighborhood(spark,
     queries = spark.createDataFrame(
         [(999, [1.0] + [0.0] * (dim - 1))],
         "qid LONG, embedding ARRAY<FLOAT>")
-    real = I._ivf_batch_score
+    real = P._batch_score
     counter = {"pairs": 0}
 
-    def counting(cand, storage):
+    def counting(fam, cand, storage):
         counter["pairs"] += (cand.select("qid", "cell").distinct()
                              .count())
-        return real(cand, storage)
+        return real(fam, cand, storage)
 
     rows = {}
     pairs = {}
     for mode in (False, "seed", "seed2"):
-        I._ivf_batch_score = counting
+        P._batch_score = counting
         counter["pairs"] = 0
         try:
             rows[mode] = sorted(
@@ -724,7 +726,7 @@ def test_seed2_prunes_more_on_asymmetric_neighborhood(spark,
                                           nprobe=16,
                                           early_exit=mode).collect())
         finally:
-            I._ivf_batch_score = real
+            P._batch_score = real
         pairs[mode] = counter["pairs"]
     assert rows["seed"] == rows[False]
     assert rows["seed2"] == rows[False]

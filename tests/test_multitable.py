@@ -20,6 +20,8 @@ from light_redistribution_in_3dptf_data_pipeline_spark.operators.similarity impo
 from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
     ann_index as A)
 from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
+    postings as P)
+from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
     recall as R)
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -284,7 +286,7 @@ def test_mt_migration_single_to_multi(spark, emb, tmp_path):
     back = str(tmp_path / "st2")
     rep2 = migrate_index(spark, new, back, num_tables=1)
     assert rep2["n_vectors"] == emb.count()
-    assert A._num_tables(A._load_meta(spark, back)) == 1
+    assert P.num_tables(A._load_meta(spark, back)) == 1
     assert A.verify_ann_index(spark, back)["violations"] == []
     qv = _qvec(emb, 0)
     assert _rows(A.ann_incremental_topk(spark, back, qv, k=10,

@@ -84,3 +84,65 @@ def test_sx3_probe_is_broadcast_pruned(spark):
     shuffle of the full corpus against 2 cell ids."""
     plan = _plan("sx3_ivf_probe_topk", spark)
     assert ("BroadcastHashJoin" in plan) or ("BroadcastExchange" in plan)
+
+
+# Operator counts of the four probe shapes the benchmark runs, over a
+# bench-shaped pair of roots (J=8 LSH, frozen-quantizer IVF): the
+# posting-index core must build exactly these plans.
+PROBE_PLAN_COUNTS = {
+    "ann_single_h2": {"exchange": 0, "broadcast": 0, "scans": 1,
+                      "partition_filters": 1},
+    "ivf_single": {"exchange": 0, "broadcast": 0, "scans": 1,
+                   "partition_filters": 1},
+    "ann_batch32": {"exchange": 1, "broadcast": 2, "scans": 3,
+                    "partition_filters": 1},
+    "ivf_batch32": {"exchange": 1, "broadcast": 1, "scans": 2,
+                    "partition_filters": 1},
+}
+
+
+def _op_counts(plan: str) -> dict:
+    import re
+
+    return {
+        "exchange": len(re.findall(r"(?<![A-Za-z])Exchange ", plan)),
+        "broadcast": plan.count("BroadcastExchange "),
+        "scans": len(re.findall(
+            r"FileScan \w+|Scan ExistingRDD|LocalTableScan", plan)),
+        "partition_filters": len(re.findall(
+            r"PartitionFilters: \[[^\]]", plan)),
+    }
+
+
+def test_probe_plan_operator_counts(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from light_redistribution_in_3dptf_data_pipeline_spark.catalog import (
+        load_table)
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
+        ann_index as A, ivf_index as I)
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    ann, ivf = str(tmp_path / "ann"), str(tmp_path / "ivf")
+    I.init_ivf_index(spark, ivf, emb)
+    A.ann_ingest_delta(spark, ann, emb, "base")
+    I.ivf_ingest_delta(spark, ivf, emb.drop("label"), "base")
+    qsrc = str(tmp_path / "queries.parquet")
+    (emb.filter("vec_id % 15 = 0").limit(32)
+     .select(F.col("vec_id").alias("qid"), "embedding")
+     .write.parquet(qsrc))
+    queries = spark.read.parquet(qsrc)
+    qv = [float(x) for x in emb.filter("vec_id = 7")
+          .select("embedding").head()[0]]
+    probes = {
+        "ann_single_h2": A.ann_incremental_topk(
+            spark, ann, qv, exclude_id=7, hamming=2),
+        "ivf_single": I.ivf_incremental_topk(spark, ivf, qv,
+                                             exclude_id=7),
+        "ann_batch32": A.ann_batch_topk(spark, ann, queries, hamming=2),
+        "ivf_batch32": I.ivf_batch_topk(spark, ivf, queries),
+    }
+    got = {name: _op_counts(df._jdf.queryExecution().executedPlan()
+                            .toString())
+           for name, df in probes.items()}
+    assert got == PROBE_PLAN_COUNTS
