@@ -170,7 +170,7 @@ def write_text_atomic(spark: SparkSession, path: str,
       version) — a reader never sees a truncated file, which plain
       ``create`` cannot promise on a LOCAL filesystem (ADVICE r7:
       a crash mid-``write_text`` left a truncated manifest that
-      poisoned every later ``_load_manifests``);
+      poisoned every later ``batches.load_manifests``);
     - object stores: direct :func:`write_text` — the PUT only
       becomes visible complete-on-close, and their rename is the
       non-atomic one.

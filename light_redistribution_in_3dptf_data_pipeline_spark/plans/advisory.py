@@ -106,7 +106,7 @@ def suggest_maintenance(spark: SparkSession, root: str,
     # neither stays loud via _index_kind below
     resolved = resolve_index_root(spark, root, strict=False)
     if not path_exists(spark, f"{resolved}/_meta.json"):
-        from .corpus import MANIFEST_DIR
+        from .batches import MANIFEST_DIR
         croot = resolve_corpus_root(spark, root, strict=False)
         if path_exists(spark, f"{croot}/{MANIFEST_DIR}"):
             return _suggest_corpus(
@@ -355,17 +355,17 @@ def _stale_index_action(spark, corpus_root: str, index_root: str,
     batches with NO recorded provenance make coverage unknowable —
     said in the reason rather than guessed."""
     from ..fs import file_mtime_ms
-    from .corpus import _load_manifests, _manifest_path, _superseded
+    from . import batches as B
     from .migration import resolve_corpus_root
 
     corpus_root = resolve_corpus_root(spark, corpus_root,
                                       strict=False)
-    cms = _load_manifests(spark, corpus_root)
-    corpus_live = sorted(b for b in cms if b not in _superseded(cms))
+    cms = B.load_manifests(spark, corpus_root)
+    corpus_live = B.live(cms)
     if not corpus_live:
         return None
-    vms = _load_manifests(spark, index_root)
-    vec_live = sorted(b for b in vms if b not in _superseded(vms))
+    vms = B.load_manifests(spark, index_root)
+    vec_live = B.live(vms)
     covered: set = set()
     unprovenanced = []
     for b in vec_live:
@@ -391,7 +391,7 @@ def _stale_index_action(spark, corpus_root: str, index_root: str,
 
     def _mt(b):
         try:
-            return file_mtime_ms(spark, _manifest_path(corpus_root,
+            return file_mtime_ms(spark, B.manifest_path(corpus_root,
                                                        b))
         except Exception:
             return -1
@@ -533,20 +533,20 @@ def _hot_suppressed(spark, root: str, kind: str, hot,
     target. Control-plane: manifests + one directory listing of the
     hot partition per live batch."""
     from ..fs import list_dir
-    from .corpus import _load_manifests, _superseded
+    from . import batches as B
 
     if hot is None:
         return False
     import re
 
-    ms = _load_manifests(spark, root)
-    live = sorted(b for b in ms if b not in _superseded(ms))
+    ms = B.load_manifests(spark, root)
+    live = B.live(ms)
     # the NEWEST recorded target by the compaction's own monotonic
-    # sequence number (ids are minted by corpus._next_seq_id as
+    # sequence number (ids are minted by batches.next_seq_id as
     # zero-padded compact-NNNNNN, so numeric order is explicit here
     # rather than trusted to lexicographic sort — the 'f10' < 'f9'
     # recency trap, ADVICE r13); a size-aware manifest whose id
-    # doesn't parse (impossible today — only _next_seq_id mints
+    # doesn't parse (impossible today — only next_seq_id mints
     # rows_per_file-bearing compactions) orders before all parsed
     sized = sorted(
         ((int(m.group(1)) if (m := re.match(r"^compact-(\d{6})$", b))
@@ -711,17 +711,16 @@ def _suggest_corpus(spark: SparkSession, root: str,
     import statistics
 
     from ..fs import dir_bytes, path_exists
-    from .corpus import (INGEST_TABLES, _load_manifests, _superseded,
-                         verify_corpus)
+    from . import batches as B
+    from .corpus import INGEST_TABLES, verify_corpus
 
     if fsck is None:
         fsck = verify_corpus(spark, root)
     actions: list[dict] = []
 
-    ms = _load_manifests(spark, root)
-    gone = _superseded(ms)
-    ingest_live = [b for b in ms if b not in gone
-                   and not b.startswith(("compact-", "retain-"))]
+    ms = B.load_manifests(spark, root)
+    ingest_live = [b for b in B.live(ms)
+                   if not b.startswith(("compact-", "retain-"))]
     ratios = {b: ms[b]["n_passage_dropped"] / ms[b]["n_gated"]
               for b in ingest_live
               if ms[b].get("n_gated")

@@ -42,6 +42,7 @@ from ..fs import path_exists, write_text_atomic
 from ..operators.similarity import (EMB_DIM, NUM_PLANES, TOP_K,
                                     _fixed_point, _planes_digest,
                                     lsh_buckets, query_bucket)
+from . import batches as B
 from . import postings as P
 from .postings import STORAGES
 
@@ -85,7 +86,7 @@ def _query_meta(spark: SparkSession, root: str,
 
 
 def committed_ann_batches(spark: SparkSession, root: str) -> list[str]:
-    return P.committed_batches(spark, root)
+    return B.committed_batches(spark, root)
 
 
 def read_ann_index(spark: SparkSession, root: str) -> DataFrame:

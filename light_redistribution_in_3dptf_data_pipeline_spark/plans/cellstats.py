@@ -423,9 +423,8 @@ def widen_stats(spark: SparkSession, root: str, delta: DataFrame,
     never materializes a 50k-entry dict."""
     existing = load_stats(spark, root)
     if existing is None:
-        from .corpus import _load_manifests, _superseded
-        ms = _load_manifests(spark, root)
-        if any(b for b in ms if b not in _superseded(ms)):
+        from .batches import committed_batches
+        if committed_batches(spark, root):
             return   # legacy root: upgrade happens at compaction
         existing = {"version": 1, "payload": None, "keys": {}}
     kind, payload = payload_column(storage)

@@ -50,8 +50,8 @@ from pyspark.sql import functions as F
 
 from ..fs import path_exists, write_text_atomic
 from ..operators.similarity import EMB_DIM, TOP_K, _fixed_point
+from . import batches as B
 from . import postings as P
-from .corpus import corpus_writer_lock
 from .postings import STORAGES
 
 IVF = P.Family(prefix="ivf", init_hint="init_ivf_index creates it",
@@ -253,7 +253,7 @@ def init_ivf_index(spark: SparkSession, root: str, train: DataFrame,
             metric=train_metric,
             normalize=train_normalize)["labeled"]
         id_col, vec_col, cell_col = "vec_id", "embedding", "label"
-    with corpus_writer_lock(spark, root, op="ivf_init") as lease:
+    with B.corpus_writer_lock(spark, root, op="ivf_init") as lease:
         if path_exists(spark, P.meta_path(root)):
             raise ValueError(
                 f"incremental IVF root {root} is already initialized "
@@ -435,7 +435,7 @@ def assign_cells(spark: SparkSession, root: str,
         meta["dim"], root).select("vec_id", "cell")
 
 def committed_ivf_batches(spark: SparkSession, root: str) -> list[str]:
-    return P.committed_batches(spark, root)
+    return B.committed_batches(spark, root)
 
 
 def read_ivf_postings(spark: SparkSession, root: str) -> DataFrame:

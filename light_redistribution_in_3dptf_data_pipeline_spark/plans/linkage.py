@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fs import path_exists
-from .corpus import _load_manifests, _superseded, _visible_scan
+from . import batches as B
 
 ORPHAN_SAMPLE = 10
 
@@ -321,15 +321,10 @@ def verify_linked(spark: SparkSession, corpus_root: str,
     - ``violations`` — human-readable list; empty = linked."""
     violations: list[str] = []
 
-    cms = _load_manifests(spark, corpus_root)
-    committed_docs = sorted(b for b in cms
-                            if b not in _superseded(cms))
-    corpus_path = f"{corpus_root}/corpus"
-    if committed_docs and path_exists(spark, corpus_path):
-        doc_ids = (_visible_scan(spark, corpus_path, committed_docs)
-                   .select("doc_id"))
-    else:
-        doc_ids = spark.createDataFrame([], "doc_id BIGINT")
+    cms = B.load_manifests(spark, corpus_root)
+    corpus = B.read_live(spark, corpus_root, "corpus", B.live(cms))
+    doc_ids = (spark.createDataFrame([], "doc_id BIGINT")
+               if corpus is None else corpus.select("doc_id"))
     vec_ids = _committed_vec_ids(spark, index_root)
 
     n_docs = doc_ids.count()
@@ -361,10 +356,9 @@ def verify_linked(spark: SparkSession, corpus_root: str,
     # rewrite that remembers it (compaction/retention identity
     # memory). An id known to neither was never committed or was
     # batch-deleted outright.
-    vms = _load_manifests(spark, index_root)
-    live_vec_batches = sorted(b for b in vms
-                              if b not in _superseded(vms))
-    corpus_known = set(cms) | _superseded(cms)
+    vms = B.load_manifests(spark, index_root)
+    live_vec_batches = B.live(vms)
+    corpus_known = set(cms) | B.superseded(cms)
 
     def _provs(b: str) -> list[str]:
         # manifests record one corpus batch (str) or several (list —

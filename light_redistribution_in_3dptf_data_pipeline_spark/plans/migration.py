@@ -49,8 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fs import path_exists, read_text, write_text_atomic
-from .corpus import (BatchAlreadyIngested, _load_manifests,
-                     _superseded)
+from . import batches as B
 
 MIGRATE_PREFIX = "migrate-"
 
@@ -187,7 +186,7 @@ def resolve_corpus_root(spark: SparkSession, alias_or_root: str,
     ``strict=False`` passes an unresolvable location through for
     write paths where a fresh root is legitimate (a first
     ``ingest_delta``)."""
-    from .corpus import MANIFEST_DIR
+    from .batches import MANIFEST_DIR
 
     if path_exists(spark, f"{alias_or_root}/{MANIFEST_DIR}"):
         return alias_or_root
@@ -249,19 +248,17 @@ def migrate_corpus(spark: SparkSession, old_root: str, new_root: str,
 
     Returns ``{"old_root", "new_root", "batches_copied",
     "batches_skipped", "n_rows", "fsck", "pointer"}``."""
-    from .corpus import (INGEST_TABLES, _manifest_path,
-                         _write_snapshot, corpus_writer_lock,
-                         verify_corpus)
+    from .corpus import INGEST_TABLES, verify_corpus
 
-    oms = _load_manifests(spark, old_root)
-    old_live = sorted(b for b in oms if b not in _superseded(oms))
+    oms = B.load_manifests(spark, old_root)
+    old_live = B.live(oms)
     if not old_live:
         raise ValueError(f"nothing to migrate: no committed batches "
                          f"under {old_root}")
 
-    with corpus_writer_lock(spark, new_root,
-                            op="migrate_corpus") as lease:
-        nms = _load_manifests(spark, new_root)
+    with B.corpus_writer_lock(spark, new_root,
+                              op="migrate_corpus") as lease:
+        nms = B.load_manifests(spark, new_root)
         foreign = sorted(set(nms) - set(old_live))
         if foreign:
             raise RuntimeError(
@@ -285,22 +282,19 @@ def migrate_corpus(spark: SparkSession, old_root: str, new_root: str,
                 if partitions_per_batch is not None:
                     df = df.repartition(partitions_per_batch)
                 df.write.mode("overwrite").parquet(dst)
-            lease.fence()
             # manifest content copied VERBATIM: identity, counts,
             # replaces-memory, and provenance survive unchanged
-            write_text_atomic(spark, _manifest_path(new_root, b),
-                              json.dumps(oms[b], sort_keys=True))
+            B.put_manifest(spark, new_root, lease, oms[b])
             copied.append(b)
-        _write_snapshot(spark, new_root,
-                        {b: oms[b] for b in old_live})
+        B.write_snapshot(spark, new_root,
+                         {b: oms[b] for b in old_live})
 
     fsck = verify_corpus(spark, new_root)
     if fsck["violations"]:
         raise RuntimeError(
             f"new root {new_root} fails its fsck — refusing to cut "
             f"over: {fsck['violations']}")
-    nms = _load_manifests(spark, new_root)
-    live_new = sorted(b for b in nms if b not in _superseded(nms))
+    live_new = B.committed_batches(spark, new_root)
     if live_new != old_live:
         raise RuntimeError(
             f"new root {new_root} holds live batches {live_new}, "
@@ -308,8 +302,8 @@ def migrate_corpus(spark: SparkSession, old_root: str, new_root: str,
 
     # the old root must not have moved during the copy — same
     # guard (and operational rule) as migrate_index's step 4
-    oms2 = _load_manifests(spark, old_root)
-    old_live2 = sorted(b for b in oms2 if b not in _superseded(oms2))
+    oms2 = B.load_manifests(spark, old_root)
+    old_live2 = B.live(oms2)
     if old_live2 != old_live or any(oms2[b] != oms[b]
                                     for b in old_live):
         raise RuntimeError(
@@ -398,8 +392,8 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
     from .linkage import _index_kind
 
     kind = _index_kind(spark, old_root)
-    oms = _load_manifests(spark, old_root)
-    old_live = sorted(b for b in oms if b not in _superseded(oms))
+    oms = B.load_manifests(spark, old_root)
+    old_live = B.live(oms)
     if not old_live:
         raise ValueError(f"nothing to migrate: no committed batches "
                          f"under {old_root}")
@@ -523,8 +517,6 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
     # never a re-embedding. The new root's prior manifests are
     # loaded ONCE: a skipped chunk was committed by an earlier run,
     # so the pre-loop snapshot has it.
-    from .corpus import _union_provenance
-
     nonzero = [b for b in old_live if oms[b].get("n_admitted", 0)]
     step = (max_batches_per_commit
             if max_batches_per_commit and max_batches_per_commit > 1
@@ -536,15 +528,14 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
         return (f"{MIGRATE_PREFIX}{chunk[0]}" if len(chunk) == 1
                 else f"{MIGRATE_PREFIX}{chunk[0]}--{chunk[-1]}")
 
-    prior = _load_manifests(spark, new_root)
+    prior = B.load_manifests(spark, new_root)
     # refuse BEFORE any ingest if the new root already holds live
     # batches outside this run's chunk set — a dirty build root, or
     # a resume under a different max_batches_per_commit, must not
     # pollute the root with overlapping migrate commits first and
     # fail only at the final check
     expected = sorted(_chunk_id(c) for c in chunks)
-    stale = sorted(b for b in prior if b not in _superseded(prior)
-                   and b not in set(expected))
+    stale = sorted(set(B.live(prior)) - set(expected))
     if stale:
         raise RuntimeError(
             f"new root {new_root} holds live batches {stale}, "
@@ -575,9 +566,9 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
         extra = ({"migrated_batches": chunk} if len(chunk) > 1
                  else None)
         try:
-            m = ingest(delta, bid, _union_provenance(oms, chunk),
+            m = ingest(delta, bid, B.union_provenance(oms, chunk),
                        extra)
-        except BatchAlreadyIngested:
+        except B.BatchAlreadyIngested:
             skipped.append(bid)   # resume path: committed last run
             # .get twice (ADVICE r10): a migrate-* batch committed by
             # a CONCURRENT writer after the pre-loop snapshot, or one
@@ -608,8 +599,7 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
         raise RuntimeError(
             f"migration of {old_root} -> {new_root} holds "
             f"{n_vectors} vectors, old root has {want_total}")
-    nms = _load_manifests(spark, new_root)
-    live_new = sorted(b for b in nms if b not in _superseded(nms))
+    live_new = B.committed_batches(spark, new_root)
     if live_new != expected:
         raise RuntimeError(
             f"new root {new_root} holds live batches {live_new}, "
@@ -637,8 +627,8 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
     # flips readers. Operationally: quiesce/stop writers on the old
     # root before migrating, and RESTART streams after the cutover so
     # they re-resolve the pointer.
-    oms2 = _load_manifests(spark, old_root)
-    old_live2 = sorted(b for b in oms2 if b not in _superseded(oms2))
+    oms2 = B.load_manifests(spark, old_root)
+    old_live2 = B.live(oms2)
     if old_live2 != old_live or any(oms2[b] != oms[b]
                                     for b in old_live):
         raise RuntimeError(
@@ -660,22 +650,17 @@ def migrate_index(spark: SparkSession, old_root: str, new_root: str,
     # skips them (a fresh post-retrain root must not re-alarm on the
     # decay it was built to fix). Small control-plane JSON;
     # resume-safe (skip existing).
-    import json as _json
-
-    from ..fs import list_dir as _ls
-    from ..fs import path_exists as _pe
-    from ..fs import read_text as _rt
-    from ..fs import write_text_atomic as _wta
+    from ..fs import list_dir
     from .recall import METRICS_DIR
-    for n in _ls(spark, f"{old_root}/{METRICS_DIR}"):
+    for n in list_dir(spark, f"{old_root}/{METRICS_DIR}"):
         if not n.endswith(".json") or ".tmp-" in n:
             continue
         dst = f"{new_root}/{METRICS_DIR}/{n}"
-        if not _pe(spark, dst):
-            doc = _json.loads(
-                _rt(spark, f"{old_root}/{METRICS_DIR}/{n}"))
+        if not path_exists(spark, dst):
+            doc = json.loads(
+                read_text(spark, f"{old_root}/{METRICS_DIR}/{n}"))
             doc.setdefault("migrated_from", old_root)
-            _wta(spark, dst, _json.dumps(doc, sort_keys=True))
+            write_text_atomic(spark, dst, json.dumps(doc, sort_keys=True))
 
     report = {"old_root": old_root, "new_root": new_root,
               "kind": kind, "batches_migrated": migrated,

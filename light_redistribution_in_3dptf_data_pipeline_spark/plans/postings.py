@@ -9,16 +9,16 @@ table, the partition column and its type, the op-name prefix — and
 the family modules supply placement, probe-key expansion and their
 own fsck check; everything else lives here once:
 
-- meta load, stored schema, committed-batch listing, the full and
-  key-scoped readers and the ``(vec_id, embedding)`` view;
-- the ingest skeleton: reserved-prefix check, writer lease,
-  ``BatchAlreadyIngested``, sweep of a crashed partial partition,
-  id-dedup anti-join, checkpoint, partitioned write, crash seam,
-  fence, direction-box widening, manifest, snapshot;
-- compaction, row-level retention, batch delete and
-  prune-uncommitted, all manifest-supersession commits;
-- the shared fsck invariants (ledger, uniqueness, occupancy,
-  cellstats coverage, orphans and pins, table bytes);
+- meta load, stored schema, the full and key-scoped readers and the
+  ``(vec_id, embedding)`` view;
+- the ingest skeleton: reserved-prefix check, writer lease, id-dedup
+  anti-join, checkpoint, partitioned write, crash seam, direction-box
+  widening between the fence and the manifest PUT;
+- the posting side of compaction (the size-aware writer, the box
+  recompute), row-level retention (the ×L vector count), batch
+  delete and prune-uncommitted;
+- the shared fsck invariants (the ×L ledger scale, uniqueness,
+  occupancy, cellstats coverage, table bytes);
 - the single and batch scoring expressions, the int8 rerank tails
   and the per-qid top-k tail;
 - the batch-probe driver: fan-out, key union, qid-range chunking
@@ -27,10 +27,12 @@ own fsck check; everything else lives here once:
 Layout per root: ``{root}/{table}/batch_id=B/{part}=N/`` (the
 vectors, partitioned by batch THEN key, so a probe prunes statically
 on ``{part} IN (...)`` inside every committed batch);
-``{root}/_manifests/{batch_id}.json`` (written LAST: the commit —
-snapshot cache, supersession, writer lease and crash recovery are
-the corpus protocol, plans/corpus); ``{root}/_meta.json`` (the
-family's identity, validated by every ingest and probe).
+``{root}/_manifests/{batch_id}.json`` (written LAST: the commit;
+the manifest-last protocol itself — writer lease, snapshot cache,
+supersession, batch delete, prunes, crash recovery, the ledger and
+orphans fsck sections — is plans/batches, shared with the corpus);
+``{root}/_meta.json`` (the family's identity, validated by every
+ingest and probe).
 
 Grounding: REPOSE (ICDE 2021) — one distributed top-k framework with
 a pluggable partitioner and per-partition pruning bounds; LSH
@@ -39,18 +41,16 @@ buckets and IVF cells are two such partitioners.
 
 from __future__ import annotations
 
-import json
 from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fs import delete_path, path_exists, write_text_atomic
+from ..fs import path_exists
 from ..operators.similarity import _fixed_point
-from .corpus import (BatchAlreadyIngested, _load_manifests,
-                     _manifest_path, _next_seq_id, _superseded,
-                     _visible_scan, _write_snapshot, corpus_writer_lock)
+from . import batches as B
+from .batches import corpus_writer_lock
 
 META_NAME = "_meta.json"
 STORAGES = ("float", "int8")
@@ -114,40 +114,29 @@ def schema(fam: Family, meta: dict) -> str:
             f"{fam.part} {fam.part_type}, batch_id STRING")
 
 
-def _live(ms: dict) -> list[str]:
-    gone = _superseded(ms)
-    return sorted(b for b in ms if b not in gone)
-
-
-def committed_batches(spark: SparkSession, root: str) -> list[str]:
-    return _live(_load_manifests(spark, root))
-
-
 # ------------------------------------------------------------- readers
 
 def read(spark: SparkSession, fam: Family, root: str,
          keys: "list[int] | None" = None,
          parallelism: "str | None" = "bytes") -> DataFrame:
     """Every committed posting row in the STORED layout — present ∩
-    committed via the corpus reader's invisible-set complement — or,
-    with ``keys``, only those of a driver-known probe key set: then
-    only the ``batch_id=B/{part}=K`` leaf dirs reach the scan
-    (corpus._visible_scan_keys; rows identical to the full read
+    committed (batches.visible_scan) — or, with ``keys``, only those
+    of a driver-known probe key set: then only the
+    ``batch_id=B/{part}=K`` leaf dirs reach the scan
+    (batches.visible_scan_keys; rows identical to the full read
     filtered on ``{part} IN keys``). ``parallelism``: ``"bytes"`` for
     single probes, ``None`` (Spark's splitting) for batch fan-outs
     whose per-byte scoring work is ~Q×."""
-    from .corpus import _visible_scan_keys
-
     meta = load_meta(spark, fam, root)
-    committed = committed_batches(spark, root)
+    committed = B.committed_batches(spark, root)
     path = f"{root}/{fam.table}"
     if not committed or not path_exists(spark, path):
         return spark.createDataFrame([], schema(fam, meta))
     if keys is None:
-        return _visible_scan(spark, path, committed, schema(fam, meta))
-    return _visible_scan_keys(spark, path, committed,
-                              schema(fam, meta), fam.part, keys,
-                              parallelism)
+        return B.visible_scan(spark, path, committed, schema(fam, meta))
+    return B.visible_scan_keys(spark, path, committed,
+                               schema(fam, meta), fam.part, keys,
+                               parallelism)
 
 
 def vectors(spark: SparkSession, fam: Family, root: str) -> DataFrame:
@@ -230,7 +219,7 @@ def ingest(spark: SparkSession, fam: Family, root: str, lease,
     - int8 roots store codes (plans/codes): placement used the
       ORIGINAL embedding; codes arriving WITH the delta (an int8→int8
       migration) are stored verbatim.
-    - Crash recovery is the corpus protocol: an unmanifested
+    - Crash recovery is batches.begin: an unmanifested
       partition is swept on same-id retry, readers never see it, the
       manifest write IS the commit. ``_crash_after=fam.table`` is the
       test seam.
@@ -240,14 +229,9 @@ def ingest(spark: SparkSession, fam: Family, root: str, lease,
       partition: values identical, no re-listing of the per-key tiny
       files (plans/cellstats)."""
     storage, dim = meta.get("storage", "float"), meta["dim"]
-    ms = _load_manifests(spark, root)
-    if batch_id in ms or batch_id in _superseded(ms):
-        raise BatchAlreadyIngested(
-            f"batch_id {batch_id!r} already ingested under {root} "
-            f"(manifest {_manifest_path(root, batch_id)})")
-    committed = _live(ms)
+    ms = B.begin(spark, root, batch_id, (fam.table,))
+    committed = B.live(ms)
     path = f"{root}/{fam.table}"
-    delete_path(spark, f"{path}/batch_id={batch_id}")
 
     if (storage == "int8" and "code" in emb.columns
             and "scale" in emb.columns):
@@ -259,8 +243,8 @@ def ingest(spark: SparkSession, fam: Family, root: str, lease,
     # path_exists guard: committed batches that all admitted zero
     # vectors leave no table directory — the anti-join is a no-op
     if dedup_ids and committed and path_exists(spark, path):
-        ids = _visible_scan(spark, path, committed,
-                            schema(fam, meta)).select("vec_id")
+        ids = B.visible_scan(spark, path, committed,
+                             schema(fam, meta)).select("vec_id")
         delta = delta.join(ids, "vec_id", "left_anti")
     delta = delta.localCheckpoint()
     n_admitted = delta.count()
@@ -290,13 +274,13 @@ def ingest(spark: SparkSession, fam: Family, root: str, lease,
     if corpus_batch is not None:
         manifest["corpus_batch"] = corpus_batch
     manifest = merge_manifest_extra(manifest, manifest_extra)
-    lease.fence()   # no zombie commit after a takeover
-    if n_admitted:
+
+    def widen():
         from .cellstats import widen_stats
         widen_stats(spark, root, stored, fam.part, storage, dim)
-    write_text_atomic(spark, _manifest_path(root, batch_id),
-                      json.dumps(manifest, sort_keys=True))
-    _write_snapshot(spark, root, {**ms, batch_id: manifest})
+
+    B.commit(spark, root, lease, ms, manifest,
+             before_put=widen if n_admitted else None)
     return manifest
 
 
@@ -329,63 +313,30 @@ def size_aware_writer(rows: DataFrame, part_col: str,
 def compact(spark: SparkSession, fam: Family, root: str,
             batch_ids: list[str] | None, n_files_per_part: int,
             rows_per_file: int | None, extra=None) -> str:
-    """Fold live batches into one ``compact-N`` batch: the rewrite is
-    invisible until its manifest (transitive ``replaces``) lands,
-    superseded partitions are pruned after, and the direction boxes
-    are recomputed exactly from the rewritten rows (the re-tightening
-    pass; also upgrades legacy pre-stats roots). ``extra(ms, ids)``:
-    family manifest keys."""
+    """Fold live batches into one ``compact-N`` batch
+    (batches.compact), written per key by :func:`size_aware_writer`;
+    after the commit and prune the direction boxes are recomputed
+    exactly from the rewritten rows (the re-tightening pass; also
+    upgrades legacy pre-stats roots). ``extra(ms, ids)``: family
+    manifest keys."""
     with corpus_writer_lock(spark, root,
                             op=f"{fam.prefix}_compact") as lease:
         meta = load_meta(spark, fam, root)
-        ms = _load_manifests(spark, root)
-        live = _live(ms)
-        ids = sorted(batch_ids) if batch_ids is not None else live
-        unknown = [b for b in ids if b not in live]
-        if unknown:
-            raise ValueError(
-                f"cannot compact non-live batches {unknown}")
-        if not ids:
-            raise ValueError("nothing to compact: no live batches")
 
-        cid = _next_seq_id(ms, "compact")
-        path = f"{root}/{fam.table}"
-        delete_path(spark, f"{path}/batch_id={cid}")
-        if path_exists(spark, path):
-            # input pinned before the same-table append starts (the
-            # corpus compaction discipline)
-            rows = (spark.read.schema(schema(fam, meta))
-                    .parquet(path)
-                    .filter(F.col("batch_id").isin(ids))
-                    .withColumn("batch_id", F.lit(cid))
-                    .localCheckpoint())
-            (size_aware_writer(rows, fam.part, n_files_per_part,
-                               rows_per_file)
-             .mode("append").partitionBy("batch_id", fam.part)
-             .parquet(path))
+        def manifest_extra(ms, ids):
+            out = extra(ms, ids) if extra else {}
+            if rows_per_file is not None:
+                # the advisory's compact_hot suppression reads the
+                # target (advisory._hot_suppressed)
+                out["rows_per_file"] = rows_per_file
+            return out
 
-        replaces = sorted(set(ids) | {r for b in ids
-                                      for r in ms[b].get("replaces", ())})
-        manifest = {
-            "batch_id": cid, "replaces": replaces,
-            **{k: sum(ms[b].get(k, 0) for b in ids)
-               for k in ("n_input", "n_id_dupes", "n_admitted")},
-            **(extra(ms, ids) if extra else {}),
-        }
-        if rows_per_file is not None:
-            # the advisory's compact_hot suppression reads the target
-            # (advisory._hot_suppressed)
-            manifest["rows_per_file"] = rows_per_file
-        from .corpus import _prune_superseded, _union_provenance
-        prov = _union_provenance(ms, ids)
-        if prov is not None:   # lineage survives compaction
-            manifest["corpus_batch"] = prov
-        lease.fence()
-        write_text_atomic(spark, _manifest_path(root, cid),
-                          json.dumps(manifest, sort_keys=True))
-        _write_snapshot(spark, root, {**ms, cid: manifest})
-
-        _prune_superseded(spark, root, tables=(fam.table,), lease=lease)
+        cid = B.compact(
+            spark, root, lease, batch_ids, {fam.table: schema(fam, meta)},
+            lambda rows: size_aware_writer(
+                rows, fam.part, n_files_per_part, rows_per_file)
+            .partitionBy("batch_id", fam.part),
+            ("n_input", "n_id_dupes", "n_admitted"), manifest_extra)
         from .cellstats import recompute_stats
         recompute_stats(spark, root, read(spark, fam, root),
                         fam.part, meta.get("storage", "float"),
@@ -397,145 +348,35 @@ def retain(spark: SparkSession, fam: Family, root: str,
            vec_ids: "list[int] | DataFrame", n_files_per_part: int,
            release_conflicting_pins: bool,
            _crash_after: str | None) -> str:
-    """ROW-LEVEL takedown: the live batches holding any target id
-    are filter-and-rewritten under a fresh ``retain-N`` batch —
-    surviving rows keep their stored key, so placement holds by
-    construction — committed by manifest supersession with an
-    ``n_deleted`` audit field. Unaffected batches are never
-    rewritten. ``vec_ids``: a list, or a one-column DataFrame
-    (joined, never expanded into an IN-list). Manifest counts stay in
-    VECTORS (distinct ids on multi-table roots)."""
+    """ROW-LEVEL takedown (batches.retain): the live batches holding
+    any target id are filter-and-rewritten under a fresh ``retain-N``
+    batch — surviving rows keep their stored key, so placement holds
+    by construction. ``vec_ids``: a list, or a one-column DataFrame.
+    Manifest counts stay in VECTORS (distinct ids on multi-table
+    roots)."""
+    def write(surv, cid, n):
+        if n:
+            (surv.repartition(n_files_per_part, F.col(fam.part))
+             .write.mode("append").partitionBy("batch_id", fam.part)
+             .parquet(f"{root}/{fam.table}"))
+
     with corpus_writer_lock(spark, root,
                             op=f"{fam.prefix}_retain") as lease:
-        return _retain(spark, fam, root, load_meta(spark, fam, root),
-                       vec_ids, n_files_per_part, lease, _crash_after,
-                       release_conflicting_pins)
-
-
-def _retain(spark, fam, root, meta, vec_ids, n_files_per_part, lease,
-            _crash_after, release_conflicting_pins):
-    from .corpus import _prune_superseded
-
-    ms = _load_manifests(spark, root)
-    live = _live(ms)
-    if not live:
-        raise ValueError(f"no committed batches under {root}")
-
-    if isinstance(vec_ids, DataFrame):
-        first = vec_ids.columns[0]
-        targets = (vec_ids.select(F.col(first).cast("bigint")
-                                  .alias("vec_id")).distinct())
-        label = f"<DataFrame {first}>"
-    else:
-        targets = spark.createDataFrame(
-            [(int(i),) for i in vec_ids], "vec_id LONG")
-        label = repr(list(vec_ids))
-
-    table, part_col = fam.table, fam.part
-    path = f"{root}/{table}"
-    ix = (_visible_scan(spark, path, live, schema(fam, meta))
-          if path_exists(spark, path)
-          else spark.createDataFrame([], schema(fam, meta)))
-    affected = sorted(
-        r.batch_id for r in
-        ix.join(targets, "vec_id", "left_semi")
-        .select("batch_id").distinct().collect())
-    if not affected:
-        raise ValueError(
-            f"no live batch contains any of vec_ids {label}")
-
-    # a pin covering an affected batch — or anything it transitively
-    # replaced, whose pinned files still hold the rows — would keep
-    # the deleted embeddings readable (GC honors pins): same
-    # takedown-wins policy and closure as corpus._delete_documents
-    from .snapshots import PinConflictError, _pin_path, list_pins
-    closure = set(affected) | {r for b in affected
-                               for r in ms[b].get("replaces", ())}
-    conflicting = sorted(
-        d for d, p in list_pins(spark, root).items()
-        if set(p["batches"]) & closure)
-    if conflicting and not release_conflicting_pins:
-        raise PinConflictError(
-            f"pins {conflicting} cover batches affected by this "
-            f"vector takedown and would keep the deleted "
-            f"embeddings readable (snapshots.read_pinned_table). "
-            f"Release them or pass release_conflicting_pins=True.")
-    # conflict DETECTED here (before the expensive rewrite), but the
-    # pin files are deleted only AFTER the fenced manifest PUT: a
-    # crash before the PUT leaves every hold intact — the takedown
-    # never landed and will be retried — while a crash between the
-    # PUT and the sweep heals at the next prune, which honors the
-    # committed manifest's released_pins as the staged release
-    # intent. No new pin can land meanwhile: we hold the writer
-    # lease pin_snapshot also takes.
-    released: list[str] = list(conflicting)
-
-    cid = _next_seq_id(ms, "retain")
-    delete_path(spark, f"{path}/batch_id={cid}")
-    surv = (ix.filter(F.col("batch_id").isin(affected))
-            .join(targets, "vec_id", "left_anti")
-            .withColumn("batch_id", F.lit(cid))
-            .localCheckpoint())
-    n_before = sum(ms[b].get("n_admitted", 0) for b in affected)
-    n_after = (surv.select("vec_id").distinct().count()
-               if num_tables(meta) > 1 else surv.count())
-    if n_after:
-        (surv.repartition(n_files_per_part, F.col(part_col))
-         .write.mode("append").partitionBy("batch_id", part_col)
-         .parquet(path))
-    if _crash_after == table:
-        raise RuntimeError(
-            f"injected crash after {table} rewrite (batch {cid})")
-
-    replaces = sorted(set(affected) | {r for b in affected
-                                       for r in ms[b].get("replaces",
-                                                          ())})
-    manifest = {"batch_id": cid, "replaces": replaces,
-                "n_deleted": n_before - n_after,
-                "n_admitted": n_after}
-    if released:
-        manifest["released_pins"] = released   # takedown audit trail
-    lease.fence()
-    write_text_atomic(spark, _manifest_path(root, cid),
-                      json.dumps(manifest, sort_keys=True))
-    if _crash_after == "manifest":
-        raise RuntimeError(
-            f"injected crash after manifest PUT (batch {cid})")
-    for d in released:   # takedown wins over EVERY holder
-        delete_path(spark, _pin_path(root, d))
-    _write_snapshot(spark, root, {**ms, cid: manifest})
-    _prune_superseded(spark, root, tables=(table,), lease=lease)
-    return cid
+        meta = load_meta(spark, fam, root)
+        count = ((lambda s: s.select("vec_id").distinct().count())
+                 if num_tables(meta) > 1 else DataFrame.count)
+        return B.retain(spark, root, lease, (fam.table,),
+                        schema(fam, meta), "vec_id", vec_ids,
+                        "embeddings", release_conflicting_pins, write,
+                        count, _crash_after)
 
 
 def delete_batch(spark: SparkSession, fam: Family, root: str,
                  batch_id: str) -> None:
-    """RETENTION: de-commit a live batch — manifest deleted first
-    (the atomic de-commit), partition swept after; its ids become
-    re-admittable through the id-dedup gate (corpus.delete_batch)."""
-    with corpus_writer_lock(spark, root,
-                            op=f"{fam.prefix}_delete:{batch_id}") as lease:
-        ms = _load_manifests(spark, root)
-        if batch_id not in ms or batch_id in _superseded(ms):
-            raise ValueError(
-                f"batch_id {batch_id!r} is not a live committed batch "
-                f"under {root}")
-        from .snapshots import PinConflictError, list_pins
-        # closure: see corpus.delete_batch — deleting the manifest
-        # would resurrect pinned-held replaced batches as live
-        closure = {batch_id} | set(ms[batch_id].get("replaces", ()))
-        holders = sorted(d for d, p in list_pins(spark, root).items()
-                         if set(p["batches"]) & closure)
-        if holders:
-            raise PinConflictError(
-                f"batch {batch_id!r} (or a batch it replaced) is "
-                f"held by pins {holders} — release them before the "
-                f"batch-level delete")
-        lease.fence()   # before the de-commit
-        delete_path(spark, _manifest_path(root, batch_id))
-        _write_snapshot(spark, root,
-                        {b: m for b, m in ms.items() if b != batch_id})
-        delete_path(spark, f"{root}/{fam.table}/batch_id={batch_id}")
+    """RETENTION: de-commit a live batch (batches.delete_batch); its
+    ids become re-admittable through the id-dedup gate."""
+    B.delete_batch(spark, root, batch_id, (fam.table,),
+                   op=f"{fam.prefix}_delete:{batch_id}")
 
 
 def prune_uncommitted(spark: SparkSession, fam: Family,
@@ -544,12 +385,9 @@ def prune_uncommitted(spark: SparkSession, fam: Family,
     crashed ingests never retried under the same id (the fsck NAMES
     them as orphans). Under the writer lease, so an in-flight
     ingest's unmanifested batch is never swept."""
-    from .corpus import _prune_uncommitted
-
     with corpus_writer_lock(
             spark, root, op=f"{fam.prefix}_prune_uncommitted") as lease:
-        return _prune_uncommitted(spark, root, lease=lease,
-                                  tables=(fam.table,))
+        return B.prune_uncommitted(spark, root, (fam.table,), lease)
 
 
 # ---------------------------------------------------------------- fsck
@@ -578,43 +416,22 @@ def verify(spark: SparkSession, fam: Family, root: str, meta: dict,
     the family made before the shared checks."""
     import statistics
 
-    from ..fs import dir_bytes, list_dir
+    from ..fs import dir_bytes
     from .cellstats import verify_stats
-    from .snapshots import pinned_batches
 
     part = fam.part
     storage = meta.get("storage", "float")
-    ms = _load_manifests(spark, root)
-    live = _live(ms)
+    ms = B.load_manifests(spark, root)
+    live = B.live(ms)
     path = f"{root}/{fam.table}"
-    ix = (_visible_scan(spark, path, live, schema(fam, meta))
-          if live and path_exists(spark, path) else None)
+    ix = B.read_live(spark, root, fam.table, live, schema(fam, meta))
     nt = num_tables(meta)
-    n_rows = 0
     occupancy: dict = {f"n_{part}s_occupied": 0, "max": 0,
                        "median": 0, "mean": 0.0,
                        f"hottest_{part}": None}
-    if ix is None and live:
-        for bid in live:
-            want = ms[bid].get("n_admitted", 0)
-            if want:
-                violations.append(
-                    f"ledger: batch {bid} manifest says {want} "
-                    f"vectors but {path} is missing")
+    # ×L: a multi-table root stores one row per vector per table
+    n_rows = B.ledger(ms, live, ix, path, violations, scale=nt)
     if ix is not None:
-        per_batch = {r.batch_id: r.n for r in
-                     ix.groupBy("batch_id")
-                     .agg(F.count("*").alias("n")).collect()}
-        n_rows = sum(per_batch.values())
-        for bid in live:
-            want = ms[bid].get("n_admitted", 0) * nt
-            got = per_batch.get(bid, 0)
-            if want != got:
-                violations.append(
-                    f"ledger: batch {bid} has {got} rows, "
-                    f"manifest says {want}"
-                    + (f" ({ms[bid].get('n_admitted', 0)} vectors × "
-                       f"{nt} tables)" if nt > 1 else ""))
         # exactly one row per vector per table — a multi-table vector
         # missing from some table is as broken as a duplicate id
         n_dupes = (ix.groupBy("vec_id")
@@ -647,13 +464,6 @@ def verify(spark: SparkSession, fam: Family, root: str, meta: dict,
     else:
         cellstats_check = "skipped: no live data"
 
-    live_set = set(live)
-    orphans = {
-        child[len("batch_id="):]
-        for child in list_dir(spark, path)
-        if child.startswith("batch_id=")
-        and child[len("batch_id="):] not in live_set}
-    pinned = orphans & pinned_batches(spark, root)
     return {"live_batches": len(live), "index_rows": n_rows,
             f"{part}_occupancy": occupancy,
             "storage": storage,
@@ -661,8 +471,8 @@ def verify(spark: SparkSession, fam: Family, root: str, meta: dict,
             check_key: status,
             "table_bytes": (dir_bytes(spark, path)
                             if path_exists(spark, path) else 0),
-            "orphans": sorted(orphans - pinned),
-            "pinned_held": sorted(pinned), "violations": violations}
+            **B.orphans(spark, root, (fam.table,), live),
+            "violations": violations}
 
 
 # ------------------------------------------------------ single probes
@@ -958,7 +768,7 @@ def batch_topk(spark: SparkSession, fam: Family, root: str,
 def _fanout(spark, fam, root, pairs, keys, dq, excluded):
     # keys are a driver list by now — the scan's file index covers
     # only their leaf dirs; parallelism=None: the fan-out's scoring
-    # work is ~Q× per scanned byte (corpus._visible_scan_keys)
+    # work is ~Q× per scanned byte (batches.visible_scan_keys)
     c = (read(spark, fam, root, keys, parallelism=None)
          .join(F.broadcast(pairs), fam.part))
     if not fam.q_in_pairs:

@@ -1,12 +1,12 @@
 """Content-addressed snapshot PINS: reproducible reads over the
-manifest-committed tables (plans/corpus.py and the vector indexes
-sharing its protocol).
+manifest-committed tables (the corpus and the vector indexes, all
+committed through plans/batches.py).
 
 A training run that reports a loss curve must be able to name — and
 later RE-READ — the exact corpus it saw. The committed view alone
 cannot do that: compaction and retention supersede batches, and
-``_prune_superseded`` (invoked eagerly at the end of both) deletes
-their files. A PIN closes the gap:
+``batches.prune_superseded`` (invoked eagerly at the end of both,
+by ``batches.supersede``) deletes their files. A PIN closes the gap:
 
 - :func:`pin_snapshot` captures the current committed batch set plus
   a digest over the batches' manifest contents, and persists it as
@@ -16,7 +16,7 @@ their files. A PIN closes the gap:
   digest — so "did these two runs train on the same data?" is a
   string comparison, not a data diff.
 - While a pin exists, garbage collection HONORS it:
-  ``corpus._prune_superseded`` skips pinned batch ids (manifest and
+  ``batches.prune_superseded`` skips pinned batch ids (manifest and
   data files both), so a pinned batch superseded by later compaction
   remains readable. Normal readers are unaffected — superseded means
   invisible to them regardless of whether files remain.
@@ -50,7 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..fs import delete_path, list_dir, path_exists, read_text, \
     write_text_atomic
-from .corpus import (_load_manifests, _superseded, corpus_writer_lock)
+from . import batches as B
+from .batches import corpus_writer_lock
 
 PIN_DIR = "_pins"
 
@@ -105,9 +106,8 @@ def pin_snapshot(spark: SparkSession, root: str,
     import time
 
     with corpus_writer_lock(spark, root, op="pin_snapshot") as lease:
-        ms = _load_manifests(spark, root)
-        gone = _superseded(ms)
-        batches = sorted(b for b in ms if b not in gone)
+        ms = B.load_manifests(spark, root)
+        batches = B.live(ms)
         if not batches:
             raise ValueError(f"nothing to pin: no committed batches "
                              f"under {root}")
@@ -182,7 +182,6 @@ def pins_report(spark: SparkSession, root: str,
     import time
 
     from ..fs import dir_bytes, file_mtime_ms
-    from .corpus import _load_manifests, _superseded
 
     if tables is None:
         if path_exists(spark, f"{root}/_meta.json"):
@@ -195,8 +194,7 @@ def pins_report(spark: SparkSession, root: str,
             from .corpus import INGEST_TABLES
             tables = INGEST_TABLES
 
-    ms = _load_manifests(spark, root)
-    gone = _superseded(ms)
+    gone = B.superseded(B.load_manifests(spark, root))
     t_now = time.time() if now is None else float(now)
     out: dict = {"pins": {}, "held_batches": [], "held_bytes": 0,
                  "flagged_pins": []}
@@ -376,7 +374,7 @@ def read_pinned_table(spark: SparkSession, root: str,
     not silently shrink."""
     doc = _resolve_pin(spark, root, pin)
     base = f"{root}/{table}"
-    ms = _load_manifests(spark, root)
+    ms = B.load_manifests(spark, root)
     paths, missing = [], []
     for b in doc["batches"]:
         p = f"{base}/batch_id={b}"
@@ -914,7 +912,7 @@ def verify_pin(spark: SparkSession, root: str,
     - ``violations``: human-readable summary; empty = reproducible.
     """
     doc = _resolve_pin(spark, root, pin)
-    ms = _load_manifests(spark, root)
+    ms = B.load_manifests(spark, root)
     missing_data, missing_manifests, drift = [], [], []
     for b in doc["batches"]:
         have_manifest = b in ms

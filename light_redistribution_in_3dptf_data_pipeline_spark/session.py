@@ -41,7 +41,7 @@ def get_spark(app_name: str = "light_redistribution_in_3dptf_data_pipeline_spark
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Probe reads hand the scan an explicit leaf-dir list (up to
-        # ~2^J·L·batches paths — plans/corpus._visible_scan_keys);
+        # ~2^J·L·batches paths — plans/batches.visible_scan_keys);
         # above this threshold Spark file-listing becomes a
         # DISTRIBUTED JOB, which costs a full job dispatch per probe
         # DataFrame (measured 2.3 s construction vs 0.6 s driver-side

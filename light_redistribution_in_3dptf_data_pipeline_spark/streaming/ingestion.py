@@ -102,9 +102,9 @@ def reconcile_replay(spark: SparkSession, root: str, batch_id: str,
     bounded by the checkpoint's WAL and skipped. Returns True when
     consistent."""
     from ..fs import path_exists
-    from ..plans.corpus import _manifest_path, read_manifest
+    from ..plans.batches import manifest_path, read_manifest
 
-    if not path_exists(spark, _manifest_path(root, batch_id)):
+    if not path_exists(spark, manifest_path(root, batch_id)):
         return True   # superseded by compaction: counts were folded
     want = read_manifest(spark, root, batch_id).get("n_input")
     if want != n_replayed:

@@ -364,9 +364,9 @@ def test_apply_maintenance_heals_skewed_root(spark, cl, tmp_path):
     fsck = I.verify_ivf_index(spark, root)
     assert fsck["violations"] == []
     # the recorded target is what suppresses the re-advice
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _load_manifests)
-    ms = _load_manifests(spark, root)
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        load_manifests)
+    ms = load_manifests(spark, root)
     live = [m for b, m in ms.items() if b.startswith("compact-")]
     assert live and live[-1]["rows_per_file"] == 64
 

@@ -224,8 +224,8 @@ def test_stream_auto_wires_corpus_provenance(spark, emb, tmp_path):
     all (list form)."""
     from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
         corpus)
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _load_manifests, _superseded)
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        load_manifests, superseded)
     from light_redistribution_in_3dptf_data_pipeline_spark.plans.linkage import (
         verify_linked)
     from light_redistribution_in_3dptf_data_pipeline_spark.streaming.ingestion import (
@@ -252,8 +252,8 @@ def test_stream_auto_wires_corpus_provenance(spark, emb, tmp_path):
             f.write(r + "\n")
     run_ingestion_with_dedup(spark, doc_src, croot) \
         .awaitTermination(120)
-    cms = _load_manifests(spark, croot)
-    cbatches = sorted(b for b in cms if b not in _superseded(cms))
+    cms = load_manifests(spark, croot)
+    cbatches = sorted(b for b in cms if b not in superseded(cms))
     assert len(cbatches) == 2
 
     # 2. the embedding producer reads the committed corpus and
@@ -272,8 +272,8 @@ def test_stream_auto_wires_corpus_provenance(spark, emb, tmp_path):
     # 3. provenance landed WITHOUT any manual argument: the vector
     # manifest records both corpus batches, and the cross-root fsck
     # is clean
-    vms = _load_manifests(spark, iroot)
-    live = [b for b in vms if b not in _superseded(vms)]
+    vms = load_manifests(spark, iroot)
+    live = [b for b in vms if b not in superseded(vms)]
     assert len(live) == 1
     assert sorted(vms[live[0]]["corpus_batch"]) == cbatches
 
@@ -286,8 +286,8 @@ def test_stream_auto_wires_corpus_provenance(spark, emb, tmp_path):
                        emb.filter("vec_id >= 900000"), "manual",
                        corpus_batch=cbatches[0])
     A.compact_ann_batches(spark, iroot)
-    vms = _load_manifests(spark, iroot)
-    live = [b for b in vms if b not in _superseded(vms)]
+    vms = load_manifests(spark, iroot)
+    live = [b for b in vms if b not in superseded(vms)]
     assert len(live) == 1
     assert sorted(vms[live[0]]["corpus_batch"]) == cbatches
 
@@ -400,8 +400,8 @@ def test_pointer_stream_reuses_legacy_inroot_checkpoint(spark, emb,
 
     from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
         migration as M)
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _load_manifests)
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        load_manifests)
 
     src = str(tmp_path / "drop")
     root = str(tmp_path / "ix")
@@ -410,7 +410,7 @@ def test_pointer_stream_reuses_legacy_inroot_checkpoint(spark, emb,
     _drop(emb, F.col("vec_id") < 70, src, "f0")
     V.run_vector_ingestion(spark, src, root).awaitTermination(120)
     assert os.path.isdir(f"{root}/_stream_checkpoint")
-    n_manifests_before = len(_load_manifests(spark, root))
+    n_manifests_before = len(load_manifests(spark, root))
 
     # upgrade: same stream now aimed through a pointer; one NEW file
     M.set_index_pointer(spark, alias, root)
@@ -420,7 +420,7 @@ def test_pointer_stream_reuses_legacy_inroot_checkpoint(spark, emb,
 
     # progress preserved: exactly ONE new manifest (the new file),
     # no n_admitted=0 replay spam, no abandoned-progress sibling
-    ms = _load_manifests(spark, root)
+    ms = load_manifests(spark, root)
     assert len(ms) == n_manifests_before + 1
     assert all(m["n_admitted"] > 0 for m in ms.values()), ms
     assert not os.path.isdir(f"{alias}_stream_checkpoint")

@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from light_redistribution_in_3dptf_data_pipeline_spark.plans import corpus
+from light_redistribution_in_3dptf_data_pipeline_spark.plans import batches, corpus
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -637,7 +637,7 @@ class TestWriterLease:
                             batch_id="d1")
         # forge a manifest with a non-numeric compact-ish id
         fs.write_text(
-            spark, corpus._manifest_path(root, "compact-final"),
+            spark, batches.manifest_path(root, "compact-final"),
             json.dumps({"batch_id": "compact-final", "n_admitted": 0}))
         cid = corpus.compact_batches(spark, root, batch_ids=["d1"])
         assert cid == "compact-000000"
@@ -667,11 +667,11 @@ class TestManifestSnapshot:
 
         root = str(tmp_path / "snap1")
         self._seed(spark, root)
-        with_snap = corpus._load_manifests(spark, root)
+        with_snap = batches.load_manifests(spark, root)
         assert set(with_snap) == {"d1", "d2", "d3"}
         # drop the snapshot: the full per-file scan resolves the same
-        fs.delete_path(spark, corpus._snapshot_path(root))
-        assert corpus._load_manifests(spark, root) == with_snap
+        fs.delete_path(spark, batches.snapshot_path(root))
+        assert batches.load_manifests(spark, root) == with_snap
 
     def test_trailing_manifest_is_picked_up(self, spark, tmp_path):
         """Crash between a manifest commit and the snapshot rewrite:
@@ -684,9 +684,9 @@ class TestManifestSnapshot:
         root = str(tmp_path / "snap2")
         self._seed(spark, root, n=2)
         tail = {"batch_id": "d9", "n_admitted": 0}
-        fs.write_text(spark, corpus._manifest_path(root, "d9"),
+        fs.write_text(spark, batches.manifest_path(root, "d9"),
                       json.dumps(tail))
-        got = corpus._load_manifests(spark, root)
+        got = batches.load_manifests(spark, root)
         assert set(got) == {"d1", "d2", "d9"} and got["d9"] == tail
 
     def test_ghost_snapshot_entry_is_dropped(self, spark, tmp_path):
@@ -698,11 +698,11 @@ class TestManifestSnapshot:
 
         root = str(tmp_path / "snap3")
         self._seed(spark, root, n=2)
-        snap_before = fs.read_text(spark, corpus._snapshot_path(root))
-        fs.delete_path(spark, corpus._manifest_path(root, "d2"))
+        snap_before = fs.read_text(spark, batches.snapshot_path(root))
+        fs.delete_path(spark, batches.manifest_path(root, "d2"))
         # restore the pre-delete (now stale) snapshot
-        fs.write_text(spark, corpus._snapshot_path(root), snap_before)
-        assert set(corpus._load_manifests(spark, root)) == {"d1"}
+        fs.write_text(spark, batches.snapshot_path(root), snap_before)
+        assert set(batches.load_manifests(spark, root)) == {"d1"}
         assert corpus.committed_batches(spark, root) == ["d1"]
 
     def test_corrupt_snapshot_degrades_to_scan(self, spark, tmp_path):
@@ -710,20 +710,20 @@ class TestManifestSnapshot:
 
         root = str(tmp_path / "snap4")
         self._seed(spark, root, n=2)
-        fs.write_text(spark, corpus._snapshot_path(root),
+        fs.write_text(spark, batches.snapshot_path(root),
                       '{"manifests": {"d1"')   # truncated
-        assert set(corpus._load_manifests(spark, root)) == {"d1", "d2"}
+        assert set(batches.load_manifests(spark, root)) == {"d1", "d2"}
 
     def test_corrupt_manifest_is_a_loud_error(self, spark, tmp_path):
         from light_redistribution_in_3dptf_data_pipeline_spark import fs
 
         root = str(tmp_path / "snap5")
         self._seed(spark, root, n=1)
-        fs.delete_path(spark, corpus._snapshot_path(root))
-        fs.write_text(spark, corpus._manifest_path(root, "d1"),
+        fs.delete_path(spark, batches.snapshot_path(root))
+        fs.write_text(spark, batches.manifest_path(root, "d1"),
                       '{"batch_id": "d1", "n_adm')   # torn write
         with pytest.raises(ValueError, match="corrupt manifest.*d1"):
-            corpus._load_manifests(spark, root)
+            batches.load_manifests(spark, root)
 
     def test_snapshot_makes_loading_one_read(self, spark, tmp_path,
                                              monkeypatch):
@@ -731,8 +731,6 @@ class TestManifestSnapshot:
         ONE text read (the snapshot), not N — the O(batches)→O(1)
         control-plane fix."""
         from light_redistribution_in_3dptf_data_pipeline_spark import fs
-        from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
-            corpus as corpus_mod)
 
         root = str(tmp_path / "snap6")
         self._seed(spark, root, n=3)
@@ -740,9 +738,9 @@ class TestManifestSnapshot:
         real = fs.read_text
         monkeypatch.setattr(fs, "read_text",
                             lambda s, p: (calls.append(p), real(s, p))[1])
-        got = corpus_mod._load_manifests(spark, root)
+        got = batches.load_manifests(spark, root)
         assert set(got) == {"d1", "d2", "d3"}
-        assert calls == [corpus._snapshot_path(root)]
+        assert calls == [batches.snapshot_path(root)]
 
 
 class TestCompactionAndRetention:
@@ -782,7 +780,7 @@ class TestCompactionAndRetention:
         # hold the prune back to exercise the invisible-garbage
         # window: after the manifest commits, reads must already be
         # exactly-once even though the superseded files still exist
-        monkeypatch.setattr(corpus, "_prune_superseded",
+        monkeypatch.setattr(batches, "prune_superseded",
                             lambda *a, **k: [])
         cid = corpus.compact_batches(spark, root)
         assert cid == "compact-000000"

@@ -118,14 +118,14 @@ def test_lost_race_classifier(spark, tmp_path):
 
 
 def test_probe_scan_partitions_by_bytes(spark, tmp_path):
-    """The key-scoped probe scan (``corpus._visible_scan_keys``) is
+    """The key-scoped probe scan (``batches.visible_scan_keys``) is
     coalesced to ceil((bytes + openCost·files) / maxPartitionBytes)
     over its selected leaf files (``fs.bytes_partitions``), counted
     here independently from the local directory tree."""
     from pyspark.sql import functions as F
 
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _visible_scan_keys)
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        visible_scan_keys)
 
     path = str(tmp_path / "postings")
     (spark.range(0, 4000, 1, 4)
@@ -143,7 +143,7 @@ def test_probe_scan_partitions_by_bytes(spark, tmp_path):
     spark.conf.set("spark.sql.files.maxPartitionBytes", "3000")
     spark.conf.set("spark.sql.files.openCostInBytes", "100")
     try:
-        df = _visible_scan_keys(spark, path, ["b0", "b1"], schema,
+        df = visible_scan_keys(spark, path, ["b0", "b1"], schema,
                                 "cell", [0, 2])
         want = -(-(nbytes + 100 * len(files)) // 3000)
         assert 1 < want < len(files)

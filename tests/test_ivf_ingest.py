@@ -359,8 +359,8 @@ def test_ivf_compaction_preserves_provenance(spark, emb, tmp_path):
     covered by the streaming test): folding batches with str and
     list corpus_batch values unions to a sorted list; a single
     distinct value stays a str."""
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _load_manifests, _superseded)
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        load_manifests, superseded)
 
     root = str(tmp_path / "ivf")
     I.init_ivf_index(spark, root, emb)
@@ -371,8 +371,8 @@ def test_ivf_compaction_preserves_provenance(spark, emb, tmp_path):
                        emb.filter("vec_id >= 200").drop("label"),
                        "d2", corpus_batch=["c1", "c2"])
     I.compact_ivf_batches(spark, root)
-    ms = _load_manifests(spark, root)
-    live = [b for b in ms if b not in _superseded(ms)]
+    ms = load_manifests(spark, root)
+    live = [b for b in ms if b not in superseded(ms)]
     assert len(live) == 1
     assert ms[live[0]]["corpus_batch"] == ["c1", "c2"]
 

@@ -111,9 +111,9 @@ def test_ivf_migration_end_to_end(spark, emb, tmp_path):
     assert shifted_cells > 1
 
     # provenance survived the re-route
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _load_manifests)
-    nms = _load_manifests(spark, new)
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        load_manifests)
+    nms = load_manifests(spark, new)
     assert nms["migrate-d1"]["corpus_batch"] == "c1"
 
     # pointer cutover: readers resolve the alias to the NEW root,
@@ -189,9 +189,9 @@ def test_lsh_migration_rebuckets(spark, emb, tmp_path):
     meta = A._load_meta(spark, new)
     assert meta["num_planes"] == 4
     assert A.verify_ann_index(spark, new)["violations"] == []
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _load_manifests)
-    assert _load_manifests(spark, new)[
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        load_manifests)
+    assert load_manifests(spark, new)[
         "migrate-d2"]["corpus_batch"] == "c2"
 
     qvec = [float(x) for x in
@@ -272,9 +272,9 @@ def test_stream_follows_pointer_after_cutover(spark, emb, tmp_path):
             == emb.filter("vec_id < 130").count())
     assert A.read_ann_index(spark, old).count() == n_old
     assert A.verify_ann_index(spark, new)["violations"] == []
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _load_manifests)
-    streamed = {b: m for b, m in _load_manifests(spark, new).items()
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        load_manifests)
+    streamed = {b: m for b, m in load_manifests(spark, new).items()
                 if b.startswith("stream-")}
     assert len(streamed) == 1, streamed   # f1 only — no f0 replay
     assert all(m["n_admitted"] > 0 for m in streamed.values())
@@ -459,8 +459,8 @@ def test_migration_coalesces_small_batches(spark, emb, tmp_path,
     record the folded ids + unioned provenance, the count/fsck gates
     still hold, and a crash mid-migration resumes by CHUNK identity
     under the same N."""
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _load_manifests)
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        load_manifests)
 
     old = str(tmp_path / "old")
     new = str(tmp_path / "new")
@@ -491,7 +491,7 @@ def test_migration_coalesces_small_batches(spark, emb, tmp_path,
     assert rep["batches_migrated"] == ["migrate-b4--b5"]
     assert rep["n_vectors"] == 240
 
-    nms = _load_manifests(spark, new)
+    nms = load_manifests(spark, new)
     assert sorted(nms) == ["migrate-b0--b3", "migrate-b4--b5"]
     assert nms["migrate-b0--b3"]["migrated_batches"] == [
         "b0", "b1", "b2", "b3"]

@@ -255,9 +255,9 @@ def test_mt_ingest_param_guards(spark, emb, tmp_path):
         A.ann_ingest_delta(spark, str(tmp_path / "x"), emb, "d1",
                            num_tables=0)
     # vectors, not rows, in the manifest ledger
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _load_manifests)
-    ms = _load_manifests(spark, root)
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        load_manifests)
+    ms = load_manifests(spark, root)
     assert ms["d1"]["n_admitted"] == 50
     assert A.read_ann_index(spark, root).count() == 150
 

@@ -146,3 +146,39 @@ def test_probe_plan_operator_counts(spark, tmp_path):
                             .toString())
            for name, df in probes.items()}
     assert got == PROBE_PLAN_COUNTS
+
+
+def test_no_private_protocol_imports():
+    """The batch-commit protocol's helpers have one owner
+    (plans/batches.py) and a public surface: no module under
+    ``plans/`` or ``streaming/`` imports an underscore name from
+    ``plans.corpus`` or ``plans.batches``, nor reaches one through a
+    module alias of either."""
+    import ast
+    import pathlib
+
+    import light_redistribution_in_3dptf_data_pipeline_spark as pkg
+
+    owners = {"corpus", "batches"}
+    base = pathlib.Path(pkg.__file__).parent
+    bad = []
+    for path in sorted([*base.glob("plans/*.py"),
+                        *base.glob("streaming/*.py")]):
+        tree = ast.parse(path.read_text())
+        aliases = set()
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.ImportFrom):
+                continue
+            mod = node.module or ""
+            if mod.rsplit(".", 1)[-1] in owners:
+                bad += [f"{path.name}: {a.name}" for a in node.names
+                        if a.name.startswith("_")]
+            elif mod in ("", "plans") or mod.endswith(".plans"):
+                aliases |= {a.asname or a.name for a in node.names
+                            if a.name in owners}
+        bad += [f"{path.name}: {n.value.id}.{n.attr}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Attribute)
+                and isinstance(n.value, ast.Name)
+                and n.value.id in aliases and n.attr.startswith("_")]
+    assert bad == []

@@ -16,7 +16,7 @@ from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
     ann_index as A)
 from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
     snapshots as SN)
-from light_redistribution_in_3dptf_data_pipeline_spark.plans import corpus
+from light_redistribution_in_3dptf_data_pipeline_spark.plans import batches, corpus
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -448,18 +448,18 @@ def test_digest_drift_detected(spark, tmp_path):
     # rewrite the commit record out-of-band (forbidden by contract)
     from light_redistribution_in_3dptf_data_pipeline_spark.fs import (
         read_text, write_text_atomic)
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _manifest_path)
-    m = json.loads(read_text(spark, _manifest_path(root, "d1")))
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        manifest_path)
+    m = json.loads(read_text(spark, manifest_path(root, "d1")))
     m["n_admitted"] = m["n_admitted"] + 1
-    write_text_atomic(spark, _manifest_path(root, "d1"),
+    write_text_atomic(spark, manifest_path(root, "d1"),
                       json.dumps(m, sort_keys=True))
     # the stale snapshot cache would mask the rewrite; drop it the
     # way a fresh control plane would see it
     from light_redistribution_in_3dptf_data_pipeline_spark.fs import delete_path
-    from light_redistribution_in_3dptf_data_pipeline_spark.plans.corpus import (
-        _snapshot_path)
-    delete_path(spark, _snapshot_path(root))
+    from light_redistribution_in_3dptf_data_pipeline_spark.plans.batches import (
+        snapshot_path)
+    delete_path(spark, snapshot_path(root))
     rep = SN.verify_pin(spark, root, pin)
     assert rep["digest_drift"] == ["d1"]
     assert any("immutable" in v for v in rep["violations"])
@@ -581,7 +581,7 @@ def test_takedown_crash_window_preserves_pins(spark, tmp_path):
 
     cid = A.delete_vectors(spark, root, [1],
                            release_conflicting_pins=True)
-    ms = corpus._load_manifests(spark, root)
+    ms = batches.load_manifests(spark, root)
     assert ms[cid]["released_pins"] == [pin["snapshot_digest"]]
     assert SN.list_pins(spark, root) == {}
 
@@ -660,7 +660,7 @@ def test_takedown_pins_survive_until_manifest_then_heal(spark,
                          release_conflicting_pins=True,
                          _crash_after="manifest")
     # the takedown COMMITTED (manifest landed, audit recorded)...
-    ms = corpus._load_manifests(spark, root)
+    ms = batches.load_manifests(spark, root)
     retained = [b for b in ms if b.startswith("retain-")]
     assert retained and ms[retained[0]]["released_pins"] == [
         pin["snapshot_digest"]]
@@ -668,7 +668,7 @@ def test_takedown_pins_survive_until_manifest_then_heal(spark,
     assert pin["snapshot_digest"] in SN.list_pins(spark, root)
 
     # the next prune reconciles: pin swept, held batch reclaimed
-    corpus._prune_superseded(spark, root, tables=("buckets",))
+    batches.prune_superseded(spark, root, ("buckets",))
     assert SN.list_pins(spark, root) == {}
     assert A.verify_ann_index(spark, root)["violations"] == []
     with pytest.raises(ValueError, match="no pin"):
