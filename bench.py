@@ -577,6 +577,12 @@ def main() -> None:
         # core count the legs ran on instead of inferring it
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
+        # the runtime profile the legs ran under (session.py)
+        "driver_jvm_args": list(
+            spark.sparkContext._jvm.java.lang.management.ManagementFactory
+            .getRuntimeMXBean().getInputArguments()),
+        "python_daemon_module": spark.sparkContext.getConf().get(
+            "spark.python.daemon.module", "pyspark.daemon"),
     }
 
     # In-run normalization against the previous round (r10 brief #7):

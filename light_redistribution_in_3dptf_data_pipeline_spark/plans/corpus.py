@@ -539,8 +539,13 @@ def _ingest(spark, root, lease, ms, new_docs, batch_id, langs,
                     f"(batch {batch_id})")
     else:
         from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.util import inheritable_thread_target
+
+        # pool threads keep the caller's job group and local properties
         with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            list(pool.map(_write_one, writes))
+            list(pool.map(inheritable_thread_target(spark)(_write_one),
+                          writes))
 
     manifest = {
         "batch_id": batch_id,

@@ -679,19 +679,22 @@ def _keys_of(fam: Family, pairs: DataFrame) -> "list[int]":
                    pairs.select(fam.part).distinct().collect()})
 
 
-def run_chunks(qids: "list[int]", max_queries: int, one,
-               concurrency: int = 1) -> DataFrame:
+def run_chunks(spark: SparkSession, qids: "list[int]", max_queries: int,
+               one, concurrency: int = 1) -> DataFrame:
     """Run a chunked batch probe over DETERMINISTIC sorted qid ranges
     of ``max_queries``: ``one(bounds)`` executes one chunk and returns
     its MATERIALIZED ≤ k rows/query result, so no job broadcasts more
     than ``max_queries`` queries; per-qid results are independent, so
     chunked ≡ unchunked row-for-row. ``concurrency > 1`` submits
     chunks from a bounded driver pool (Spark interleaves the jobs'
-    tasks; union order stays fixed by chunk index) — N chunks'
+    tasks; union order stays fixed by chunk index; each chunk's jobs
+    keep the caller's job group) — N chunks'
     broadcasts and checkpoints then coexist, so 1 (strict serial) is
     the default."""
     from concurrent.futures import ThreadPoolExecutor
     from functools import reduce
+
+    from pyspark.util import inheritable_thread_target
 
     ranges = [(qids[i], qids[min(i + max_queries, len(qids)) - 1])
               for i in range(0, len(qids), max_queries)]
@@ -700,7 +703,8 @@ def run_chunks(qids: "list[int]", max_queries: int, one,
     else:
         with ThreadPoolExecutor(
                 max_workers=min(concurrency, len(ranges))) as pool:
-            parts = list(pool.map(one, ranges))
+            parts = list(pool.map(inheritable_thread_target(spark)(one),
+                                  ranges))
     return reduce(DataFrame.unionByName, parts)
 
 
@@ -760,7 +764,7 @@ def batch_topk(spark: SparkSession, fam: Family, root: str,
                 pa = probe_all.filter(within)
                 return run(pa, dq.filter(within),
                            _keys_of(fam, pa)).localCheckpoint()
-            return run_chunks(qids, max_queries_per_job, one,
+            return run_chunks(spark, qids, max_queries_per_job, one,
                               chunk_concurrency)
     return run(probe_all, dq)
 

@@ -12,6 +12,17 @@ that matter on a real cluster at 100 TB:
   host-independent (required for DuckDB oracle parity).
 - ``maxPartitionBytes`` kept at 128m so huge binary (image) corpora split
   into executor-memory-sized tasks.
+
+The processes a session launches get one runtime profile (README
+"Runtime profile"). A short-lived local session spends more CPU in
+HotSpot's JIT than in its queries, mostly C2 compiling Janino, Java
+serialization and Catalyst code that runs a few thousand times; the
+driver JVM therefore promotes a method to C2 only at 4x the JDK 17
+tier-4 thresholds (C1 and C2 both stay on). The flags go in
+``spark.driver.defaultJavaOptions``, which spark-submit prepends to
+``--driver-java-options``; a user's own ``--conf`` of it replaces
+them. Python workers fork from ``worker_daemon``, which stops them
+re-reading Spark's zip archives before every task.
 """
 
 from __future__ import annotations
@@ -21,6 +32,12 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# JDK 17 defaults (5000, 600, 15000, 40000) x4
+DRIVER_JIT_OPTIONS = ("-XX:Tier4InvocationThreshold=20000 "
+                      "-XX:Tier4MinInvocationThreshold=2400 "
+                      "-XX:Tier4CompileThreshold=60000 "
+                      "-XX:Tier4BackEdgeThreshold=160000")
+WORKER_DAEMON = f"{__package__}.worker_daemon"
 
 
 def get_spark(app_name: str = "light_redistribution_in_3dptf_data_pipeline_spark",
@@ -55,6 +72,8 @@ def get_spark(app_name: str = "light_redistribution_in_3dptf_data_pipeline_spark
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
+        .config("spark.python.daemon.module", WORKER_DAEMON)
     )
     return builder.getOrCreate()
 

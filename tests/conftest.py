@@ -14,6 +14,30 @@ def spark():
     yield s
 
 
+def jobs_in_group(spark, group, fn) -> tuple[int, int]:
+    """Run ``fn`` under job group ``group``; return the number of jobs
+    it started (by job-id range in the status store) and the number
+    of those the group holds."""
+    sc = spark.sparkContext
+    store, bus = sc._jsc.sc().statusStore(), sc._jsc.sc().listenerBus()
+
+    def newest():
+        bus.waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    j0 = newest()
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    j1 = newest()
+    return j1 - j0, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

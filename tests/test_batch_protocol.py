@@ -6,7 +6,8 @@ with a duplicated batch id, row-level retention with and without a
 conflicting pin, the pin-refused batch delete and re-admission, both
 crash points of an ingest (after the data write, after the manifest
 PUT), the orphan sweep, the fsck ledger, the corpus-alias entry
-points, and the Spark job count of each commit path."""
+points, and the Spark job count of each commit path and its job
+group."""
 
 from __future__ import annotations
 
@@ -31,7 +32,7 @@ from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
 from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
     snapshots as SN)
 
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_in_group
 
 FAMILIES = ("corpus", "ann", "ivf")
 
@@ -261,7 +262,8 @@ def test_corpus_maintenance_through_alias(spark, templates, tmp_path):
 
 
 # Jobs each commit path starts, counted by job-id range in the status
-# store (the pooled table writes run without an inherited job group).
+# store; every one of them, the pooled corpus index writes included,
+# runs in the caller's job group.
 # The values are those of the code before the protocol moved into
 # plans/batches.py, measured on a 4-core host: the move must not add
 # or drop a job.
@@ -271,20 +273,6 @@ JOBS = {
     ("corpus", "retain"): 18, ("ann", "ingest"): 9,
     ("ivf", "ingest"): 11,
 }
-
-
-def _jobs(spark, fn) -> int:
-    sc = spark.sparkContext
-    store, bus = sc._jsc.sc().statusStore(), sc._jsc.sc().listenerBus()
-
-    def newest():
-        bus.waitUntilEmpty()
-        jobs = store.jobsList(None)
-        return jobs.apply(0).jobId() if jobs.size() else -1
-
-    j0 = newest()
-    fn()
-    return newest() - j0
 
 
 @pytest.mark.parametrize("name,op", sorted(JOBS))
@@ -298,4 +286,5 @@ def test_commit_path_job_counts(spark, cl, templates, tmp_path, name,
                                         **gated),
            "compact": lambda: fam.compact(root),
            "retain": lambda: fam.retain(root, [3, 8])}[op.split("_")[0]]
-    assert _jobs(spark, run) == JOBS[(name, op)]
+    started, grouped = jobs_in_group(spark, f"{name}-{op}", run)
+    assert grouped == started == JOBS[(name, op)]

@@ -1,6 +1,7 @@
 """Fast parity gate for the posting-index core (plans/postings.py):
 every probe path the DuckDB oracle cannot see — single, pinned,
-batch, chunked (serial and chunk-pool), early exit (box/seed/seed2),
+batch, chunked (serial and chunk-pool, whose jobs keep the caller's
+job group), early exit (box/seed/seed2),
 ``probe_buckets`` and the int8 rerank — over five small roots
 (≤ 256 vectors each: LSH float L=1, LSH float L=2, LSH int8, IVF
 float, IVF int8). Chunked must equal unchunked and early exit must
@@ -29,7 +30,7 @@ from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
 from light_redistribution_in_3dptf_data_pipeline_spark.plans import (
     snapshots as S)
 
-from conftest import SF_DIR
+from conftest import SF_DIR, jobs_in_group
 J = 4          # 16 buckets per table: hamming=J is a full fan-out
 N_CELLS = 6
 K = 5
@@ -193,6 +194,15 @@ def _subtrees(plan: str, node: str) -> list[str]:
                 j += 1
             out.append("\n".join(lines[i:j]))
     return out
+
+
+def test_chunk_pool_jobs_stay_in_the_callers_job_group(spark, roots,
+                                                      queries):
+    started, grouped = jobs_in_group(
+        spark, "posting-chunk-pool",
+        lambda: _batch(roots["ivf_f"], spark, queries, nprobe=3,
+                       max_queries_per_job=2, chunk_concurrency=2))
+    assert grouped == started > 0
 
 
 def test_chunk_broadcasts_only_its_queries(spark, roots, cl, queries,
